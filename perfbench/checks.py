@@ -7,13 +7,15 @@ contract assigns: the rank of (conv_id, turn_idx). Facet, range-facet and
 stats mirrors follow the facet SQL there, with the corpus's columns.
 
 Scores from the mirrors are rounded to 4 decimals, so a score matches when it
-is within ``SCORE_TOL``; docs whose scores differ by less than that may
-swap ranks.
+is within ``SCORE_TOL``. Docs whose scores differ by less than that may swap
+ranks, also across the last rank of a page: the mirror ranks every matching
+doc, and a returned doc must be one of them, with its own score.
 """
 
 from __future__ import annotations
 
 import math
+from typing import NamedTuple
 
 import duckdb
 import pandas as pd
@@ -21,6 +23,8 @@ import pandas as pd
 from __spark_entry__ import _TOK, _bm25_sql, _phrase_sql
 
 SCORE_TOL = 2e-4
+# LIMIT of a mirror query that ranks every matching doc
+ALL = 1 << 30
 
 
 def mirror_db(corpus: pd.DataFrame) -> duckdb.DuckDBPyConnection:
@@ -71,32 +75,47 @@ def _matches_cte(words: str) -> str:
       WHERE term IN ({_terms_sql(words)}))"""
 
 
+class Ranked(NamedTuple):
+    """The mirror's answer to a top-k request: the expected page of
+    (doc_id, score) rows, and the score of every doc the request matches.
+    Docs whose scores tie at the page boundary may be returned in place of
+    one another, so a returned doc is checked against ``scores``."""
+    rows: list
+    scores: dict
+
+
+def _ranked(con, sql_full: str, page=slice(None), keep=None) -> Ranked:
+    """``sql_full`` ranks every matching doc; ``keep`` is an optional set of
+    doc_ids the request admits (a doc filter)."""
+    rows = con.execute(sql_full).fetchall()
+    if keep is not None:
+        rows = [r for r in rows if r[0] in keep]
+    return Ranked(rows[page], {d: s for d, s in rows})
+
+
 def expected(con, req) -> object:
     """The mirror's answer for one request (see workloads.REQUESTS)."""
     kind, a = req.kind, req.args
-    q = a.get("q", "")
+    q, k = a.get("q", ""), a["k"]
     if kind in ("search", "filtered", "page"):
-        full = kind != "search"
-        sql = _bm25_sql(_terms_sql(q), a.get("mode", "OR"),
-                        1 << 30 if full else a["k"])
-        rows = con.execute(sql).fetchall()
+        sql = _bm25_sql(_terms_sql(q), a.get("mode", "OR"), ALL)
+        keep = None
         if kind == "filtered":
             keep = {r[0] for r in con.execute(
                 f"SELECT doc_id FROM documents WHERE {a['filter']}")
                 .fetchall()}
-            rows = [r for r in rows if r[0] in keep][:a["k"]]
-        elif kind == "page":
-            rows = rows[a["k"]:2 * a["k"]]
-        return rows
+        page = slice(k, 2 * k) if kind == "page" else slice(k)
+        return _ranked(con, sql, page, keep)
     if kind == "qs":
-        return con.execute(_bm25_sql(**a["mirror"], k=a["k"])).fetchall()
+        return _ranked(con, _bm25_sql(**a["mirror"], k=ALL), slice(k))
     if kind == "phrase":
         t1, t2 = q.split()
-        return con.execute(
-            _phrase_sql(t1, t2, a["slop"], a["k"])).fetchall()
+        return _ranked(con, _phrase_sql(t1, t2, a["slop"], ALL), slice(k))
     if kind == "collapse":
-        sql = _bm25_sql(_terms_sql(q), "OR", a["k"], collapse_col=a["field"])
-        return [r[:2] for r in con.execute(sql).fetchall()]
+        sql = _bm25_sql(_terms_sql(q), "OR", k, collapse_col=a["field"])
+        rows = [r[:2] for r in con.execute(sql).fetchall()]
+        full = _ranked(con, _bm25_sql(_terms_sql(q), "OR", ALL))
+        return Ranked(rows, full.scores)
     if kind == "sort_by":
         sql = _bm25_sql(_terms_sql(q), "OR", a["k"],
                         sort_by=(a["field"], "ASC"))
@@ -130,17 +149,18 @@ def expected(con, req) -> object:
     raise ValueError(f"no mirror for request kind {kind!r}")
 
 
-def topk_matches(got, exp) -> bool:
-    """Ranked (doc_id, score) lists agree: the same length, rank-wise scores
-    within SCORE_TOL, and every returned doc in the expected list with its
-    score. Docs tied within the tolerance may come in either order."""
-    if len(got) != len(exp):
+def topk_matches(got, exp: Ranked) -> bool:
+    """A ranked (doc_id, score) list agrees with the mirror: the same
+    length, rank-wise scores within SCORE_TOL, distinct docs, and every
+    returned doc a match of the request with that score. Docs tied within
+    the tolerance may come in either order, also across the page
+    boundary."""
+    if len(got) != len(exp.rows) or len({d for d, _ in got}) != len(got):
         return False
-    exp_score = {d: s for d, s in exp}
-    for (gd, gs), (_, es) in zip(got, exp):
+    for (gd, gs), (_, es) in zip(got, exp.rows):
         if abs(gs - es) > SCORE_TOL:
             return False
-        if gd not in exp_score or abs(exp_score[gd] - gs) > SCORE_TOL:
+        if gd not in exp.scores or abs(exp.scores[gd] - gs) > SCORE_TOL:
             return False
     return True
 
@@ -159,11 +179,11 @@ def matches(kind: str, got, exp) -> bool:
     return got == exp
 
 
-def checker_catches_wrong_answer(got, exp) -> bool:
-    """Negative control, run on every search check: a result with its top
-    doc replaced by a doc that is not in the expected answer must fail the
+def checker_catches_wrong_answer(got, exp: Ranked) -> bool:
+    """Negative control, run on every top-k check: a result with its top
+    doc replaced by a doc that does not match the request must fail the
     comparison."""
-    if not got or not exp:
+    if not got or not exp.rows:
         return True
-    wrong = [(max(d for d, _ in exp) + 1, got[0][1])] + list(got[1:])
+    wrong = [(max(exp.scores) + 1, got[0][1])] + list(got[1:])
     return not topk_matches(wrong, exp)

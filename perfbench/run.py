@@ -106,6 +106,10 @@ def main() -> int:
         if spark is not None:
             _stop_spark(spark)
         shutil.rmtree(tmp, ignore_errors=True)
+        try:
+            os.rmdir(os.path.dirname(tmp))  # only if no other run uses it
+        except OSError:
+            pass
 
     if args.trace:
         # the end-to-end figures of the traced run, for the overhead
