@@ -167,7 +167,7 @@ def collapse_search(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Field collapsing on the query path (r5) [public: Solr
     CollapsingQParserPlugin]: top-10 of the single best 'spark join'
     (OR) hit per source value — collapse needs the FULL match set, so
-    the sort=False scorer feeds a per-group window rank, then the
+    the full-match scorer feeds a per-group window rank, then the
     ordinary global top-k."""
     ix = _documents_index(spark, sf_dir)
     top = ix.search_collapse(_FLAGSHIP_QUERY, "source", k=_FLAGSHIP_K)

@@ -1,6 +1,7 @@
 """M3-M6 tests — SURVEY.md §5.3-5.6: text-equality invariant, index
 structure, BM25 oracle parity, BMW ≡ exhaustive, filters, salting."""
 
+import functools
 import glob
 
 import numpy as np
@@ -191,46 +192,69 @@ def test_filter_empty_allowed_set(engine):
 
 
 def test_scorer_streams_chunk_runs_with_carry():
-    """Unit-level: the streaming scorer consumes chunk runs off the batch
-    iterator with a carry; ragged batches that split chunks mid-run yield
-    bit-identical results to a single batch, pruned == exhaustive, and the
-    broadcast allowed-set filter applies pre-heap."""
+    """Unit-level: the streaming scorer loop consumes chunk runs off the
+    batch iterator with a carry; for the BM25 term scorer AND the phrase
+    scorer, ragged batches that split chunks mid-run yield bit-identical
+    results to a single batch, pruned == exhaustive, and the broadcast
+    allowed-set filter applies pre-heap."""
     import types
     from parser_indexer_spark.build import _encode_rows
-    from parser_indexer_spark.search import _make_scorer, bm25_idf
+    from parser_indexer_spark.codec import varint_slices
+    from parser_indexer_spark.search import _make_phrase_scorer, \
+        _make_scorer, bm25_idf
 
     cfg = EngineConfig(block_size=16, chunk_bits=5, n_buckets=4)
+    dl = 10 + np.arange(300, dtype=np.int64) % 7
+
+    def rows(term, d, tf, first_pos):
+        """Positional block rows: tf[i] positions first_pos, +2, +4, ..."""
+        gaps = np.concatenate([[first_pos] + [2] * (int(t) - 1) for t in tf])
+        pg = np.empty(d.size, dtype=object)
+        pg[:] = varint_slices(gaps.astype(np.uint64),
+                              np.concatenate(([0], np.cumsum(tf)[:-1])))
+        return _encode_rows(np.array([term] * d.size, object), d, tf,
+                            dl[d], cfg, pg=pg)
+
+    # "a" at positions 0, 2, 4 (tf 1-3) of every doc; "b" at 1, 3 of even
+    # docs: the phrase "a b" matches every even doc, phrase_tf = min(tf_a, 2)
     da = np.arange(300, dtype=np.int64)
     db = np.arange(0, 300, 2, dtype=np.int64)
-    rows_a = _encode_rows(np.array(["a"] * 300, object), da,
-                          1 + (da % 3), np.full(300, 10, np.int64), cfg)
-    rows_b = _encode_rows(np.array(["b"] * 150, object), db,
-                          np.full(150, 2, np.int64),
-                          np.full(150, 10, np.int64), cfg)
-    blocks = (pd.concat([rows_a, rows_b], ignore_index=True)
+    blocks = (pd.concat([rows("a", da, 1 + (da % 3), 0),
+                         rows("b", db, np.full(150, 2, np.int64), 1)],
+                        ignore_index=True)
               .sort_values(["chunk", "term"], kind="stable")
               .reset_index(drop=True))
     idf = {"a": bm25_idf(300, 300), "b": bm25_idf(300, 150)}
+    scorers = {
+        "term": (functools.partial(_make_scorer, terms=["a", "b"], idf=idf,
+                                   mode="OR"), da),
+        "phrase": (functools.partial(_make_phrase_scorer,
+                                     phrase_terms=["a", "b"],
+                                     idf_sum=idf["a"] + idf["b"], slop=0),
+                   db),
+    }
+    for kind, (make, matching) in scorers.items():
+        def run(batches, prune=True, truncate=True, allowed=None):
+            bc = (types.SimpleNamespace(value=allowed)
+                  if allowed is not None else None)
+            sc = make(k1=1.2, b=0.75, avg_dl=10.0, k=10, prune=prune,
+                      truncate=truncate, chunk_bits=5, allowed_bc=bc)
+            out = pd.concat(list(sc(iter(batches))), ignore_index=True)
+            return sorted(zip(out["doc_id"], out["score"]),
+                          key=lambda x: (-x[1], x[0]))[:10 if truncate else None]
 
-    def run(batches, prune=True, truncate=True, allowed=None):
-        bc = types.SimpleNamespace(value=allowed) if allowed is not None else None
-        sc = _make_scorer(terms=["a", "b"], idf=idf, k1=1.2, b=0.75,
-                          avg_dl=10.0, k=10, mode="OR", prune=prune,
-                          truncate=truncate, chunk_bits=5, allowed_bc=bc)
-        out = pd.concat(list(sc(iter(batches))), ignore_index=True)
-        return sorted(zip(out["doc_id"], out["score"]),
-                      key=lambda x: (-x[1], x[0]))[:10 if truncate else None]
-
-    whole = run([blocks])
-    cuts = [0, 3, 4, 9, 15, 16, 21, len(blocks)]  # ragged, splits chunks
-    split = [blocks.iloc[a:b] for a, b in zip(cuts, cuts[1:])]
-    assert run(split) == whole
-    assert run(split, prune=False) == whole  # BMW lossless while streaming
-    # allowed-set filter pre-heap == post-hoc filter of exhaustive scores
-    odd = np.arange(1, 300, 2, dtype=np.int64)
-    exhaustive = run([blocks], prune=False, truncate=False)
-    expect = [x for x in exhaustive if x[0] % 2 == 1][:10]
-    assert run(split, allowed=odd) == expect
+        exhaustive = run([blocks], prune=False, truncate=False)
+        assert sorted(d for d, _ in exhaustive) == matching.tolist(), kind
+        whole = run([blocks])
+        assert whole == exhaustive[:10], kind
+        cuts = [0, 3, 4, 9, 15, 16, 21, len(blocks)]  # ragged, splits chunks
+        split = [blocks.iloc[a:b] for a, b in zip(cuts, cuts[1:])]
+        assert run(split) == whole, kind
+        assert run(split, prune=False) == whole, kind  # BMW lossless
+        # allowed-set filter pre-heap == post-hoc filter of exhaustive scores
+        allowed = np.arange(0, 300, 3, dtype=np.int64)
+        expect = [x for x in exhaustive if x[0] % 3 == 0][:10]
+        assert run(split, allowed=allowed) == expect, kind
 
 
 @pytest.mark.parametrize("q,mode", QUERIES[:8])

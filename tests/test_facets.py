@@ -209,12 +209,11 @@ def test_boosted_search_function_score(engine, oracle, corpus):
 
 
 def test_unsorted_search_equals_sorted_set(engine, oracle):
-    """sort=False returns exactly the full match set with exact scores
-    (the facet path's correctness core): same (doc_id, score) multiset as
-    the exhaustive oracle."""
+    """export_matches returns exactly the full match set with exact
+    scores (the facet path's correctness core): same (doc_id, score)
+    multiset as the exhaustive oracle."""
     got = {(r.doc_id, round(r.score, 9))
-           for r in engine.search("spark join", sort=False,
-                                  prune=False).collect()}
+           for r in engine.export_matches("spark join").collect()}
     exp = {(d, round(s, 9)) for d, s in oracle.search("spark join",
                                                       k=10 ** 9)}
     assert got == exp

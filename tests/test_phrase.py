@@ -74,6 +74,33 @@ def test_phrase_single_term_equals_search(engine):
         _rows(engine.search("spark", k=10))
 
 
+def test_single_token_phrase_is_literal(spark, tmp_path):
+    """A one-token phrase is the plain term query of its ANALYZED token: a
+    trailing '*' is punctuation to the analyzer, never a prefix expansion
+    (which would match "running"/"runner", docs with no token "run")."""
+    from parser_indexer_spark.build import build_index
+    from parser_indexer_spark.search import Index
+
+    texts = ["run fast", "running late", "runner up", "run run home",
+             "walk home"]
+    pdf = pd.DataFrame({
+        "conv_id": [f"c{i}" for i in range(len(texts))],
+        "turn_idx": [0] * len(texts), "role": ["user"] * len(texts),
+        "text": texts, "tool": [None] * len(texts),
+        "ts": pd.to_datetime(["2024-01-01"] * len(texts)),
+    })
+    out = str(tmp_path / "prefixes")
+    build_index(spark, spark.createDataFrame(pdf), out,
+                EngineConfig(n_buckets=4, build_partitions=2, chunk_bits=8))
+    ix = Index(spark, out)
+    want = _rows(ix.search("run", k=10))
+    assert sorted(d for d, _ in want) == [0, 3]
+    assert _rows(ix.phrase("run*", k=10)) == want
+    assert _rows(ix.phrase("run", k=10)) == want
+    # the multi-token path already read "run*" literally
+    assert [d for d, _ in _rows(ix.phrase("run* home", k=10))] == [3]
+
+
 def test_phrase_with_doc_filter(engine, oracle, corpus):
     allowed = set(corpus.index[corpus["role"] == "assistant"])
     got = _rows(engine.phrase("spark join", k=10,
@@ -94,8 +121,9 @@ def test_phrase_deep_paging(engine):
 
 
 def test_positions_roundtrip_unit():
-    """_encode_rows pos payload -> _decode_positions round-trips absolute
-    positions for multi-block, multi-doc runs under both codecs."""
+    """_encode_rows pos payload -> _decode_positions (the batched decoder
+    the phrase scorer runs) round-trips absolute positions for
+    multi-block, multi-doc runs under both codecs."""
     from parser_indexer_spark.build import _encode_rows
     from parser_indexer_spark.search import _decode_positions
     from parser_indexer_spark.codec import decode, delta_decode
@@ -122,18 +150,23 @@ def test_positions_roundtrip_unit():
                            codec=codec)
         rows = _encode_rows(np.array(["t"] * n, object), d, tf, dl, cfg,
                             pg=pg_slices)
-        got_docs, got_pos = [], []
+        assert len(rows) > 1
+        got_docs, got_tf = [], []
         for r in rows.itertuples():
             nb = int(r.num_docs)
             bd = delta_decode(decode(r.docs_enc, nb), int(r.first_doc_id))
             btf = decode(r.tfs_enc, nb).astype(np.int64)
-            bpos = _decode_positions(r.pos_enc, btf)
             got_docs.append(np.repeat(bd, btf))
-            got_pos.append(bpos)
+            got_tf.append(btf)
+        # one call across every block, as the scorer decodes a term's
+        # blocks of a chunk
+        got_pos = _decode_positions(rows["pos_enc"].to_numpy(),
+                                    np.concatenate(got_tf),
+                                    rows["num_docs"].to_numpy(np.int64))
         exp_docs = np.repeat(d, tf)
         exp_pos = np.concatenate(pos_abs)
         assert (np.concatenate(got_docs) == exp_docs).all()
-        assert (np.concatenate(got_pos) == exp_pos).all()
+        assert (got_pos == exp_pos).all()
 
 
 def test_highlight_phrase_golden(spark):
