@@ -57,3 +57,21 @@ def oracle(corpus):
 def engine(spark, index_dir):
     from parser_indexer_spark.search import Index
     return Index(spark, index_dir)
+
+
+@pytest.fixture
+def exchange_path(monkeypatch):
+    """Turn the driver path's size gate off: every query is scored through
+    the distributed path (pruned scan -> chunk exchange -> mapInPandas
+    scorer), as scans above one scoring task's quota are. Returns the list
+    of term lists the gate was asked about, so a test can check that the
+    scorer tail really ran."""
+    from parser_indexer_spark.search import Index
+    asked = []
+
+    def never(self, terms, quota):
+        asked.append(list(terms))
+        return False
+
+    monkeypatch.setattr(Index, "_scan_fits", never)
+    return asked

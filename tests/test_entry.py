@@ -64,6 +64,32 @@ def test_driver_report_cap():
 
 @pytest.mark.parametrize("name", sorted(_all_queries().keys()))
 def test_query_vs_oracle(spark, sf_dir, ddb, name):
+    _check_vs_oracle(spark, sf_dir, ddb, name)
+
+
+# the entries that score over the inverted index (through _documents_index;
+# the dictionary and spelling entries and an AND with an absent term never
+# reach the scorer)
+_NO_SCORER = {"spellcheck", "term_dict_stats", "term_suggest",
+              "topk_bm25_and_absent"}
+_INDEX_QUERIES = sorted(n for n, fn in _all_queries().items()
+                        if "_documents_index" in fn.__code__.co_names
+                        and n not in _NO_SCORER)
+
+
+@pytest.mark.parametrize("name", _INDEX_QUERIES)
+def test_index_query_vs_oracle_exchange_path(spark, sf_dir, ddb, name,
+                                             exchange_path):
+    """The index entries again with the driver path's size gate off, so
+    the distributed scorer (the path every scan above one scoring task's
+    quota takes) keeps the same oracle check as the default path."""
+    _check_vs_oracle(spark, sf_dir, ddb, name)
+    assert exchange_path, f"{name} never reached the scorer"
+
+
+def _check_vs_oracle(spark, sf_dir, ddb, name):
+    """Row count + column names + order-insensitive exact values of the
+    entry ``name`` against its DuckDB oracle SQL."""
     fn = _all_queries()[name]
     sql = entrymod.oracle_sql().get(name)
     assert sql is not None, f"{name} has no oracle SQL"

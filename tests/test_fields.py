@@ -238,3 +238,26 @@ def test_sparse_field_ranks_like_dense_subset_index(spark, tmp_path):
         exp = [(int(sparse_ids[r.doc_id]), r.score) for r in
                ix_dense.search(q, k=20).collect()]
         assert got == exp, q
+
+
+def test_unfielded_expansions_skip_fielded_terms(fielded, engine):
+    """Prefix, wildcard, range, regexp and fuzzy expansions of an
+    unfielded clause range over TEXT terms only: "<field>:<term>"
+    dictionary entries (role:user, tool:...) neither join the expansion
+    nor count against max_expansions, so expansion queries on a fielded
+    index equal those on the same corpus indexed without fields."""
+    text = fielded.expand_prefix("ro")
+    assert text and not any(":" in t for t in text)
+    assert fielded.expand_prefix("ro", max_expansions=len(text)) == text
+    assert engine.expand_prefix("ro") == text
+    for got in (fielded.expand_wildcard("ro*"),
+                fielded.expand_range("ro", "rz"),
+                fielded.expand_regexp("ro.*"),
+                fielded.expand_fuzzy("role", 1)):
+        assert not any(":" in t for t in got), got
+    for run in (lambda ix: ix.query("ro*", k=2000),
+                lambda ix: ix.search("ro*", k=2000),
+                lambda ix: ix.query("/ro.*/", k=2000)):
+        a = [(r.doc_id, round(r.score, 9)) for r in run(fielded).collect()]
+        b = [(r.doc_id, round(r.score, 9)) for r in run(engine).collect()]
+        assert a == b and 0 < len(a) < 2000

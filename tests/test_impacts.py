@@ -399,3 +399,35 @@ def test_multi_term_dispatch_guards(spark, skew_index, monkeypatch):
     assert called.get("n") == 2
     ix.search("alpha beta", k=cfg.impact_top + 1, mode="OR").collect()
     assert called.get("n") == 3
+
+
+def test_driver_answers_keep_rank_order(imp_engine, monkeypatch):
+    """Driver-side answers — the impact fast path's and the small-scan
+    scorer's local relations — come back in (score desc, doc_id asc)
+    order from collect(), toPandas(), limit() and fetch(), with no Spark
+    sort in their plans."""
+    t = head_term(imp_engine)
+    called = []
+    orig = imp_engine._search_terms
+
+    def spy(*a, **kw):
+        called.append(1)
+        return orig(*a, **kw)
+
+    monkeypatch.setattr(imp_engine, "_search_terms", spy)
+    sidecar = imp_engine.search(t, k=10)
+    assert not called, "sidecar fast path was not taken"
+    scanned = imp_engine.search(t, k=IMP_CFG.impact_top + 8)
+    assert called, "k > impact_top must take the scan"
+    for df in (sidecar, scanned):
+        plan = df._jdf.queryExecution().executedPlan().toString()
+        assert "LocalTableScan" in plan and "Sort" not in plan
+        rows = [(r.doc_id, r.score) for r in df.collect()]
+        assert len(rows) > 3
+        assert rows == sorted(rows, key=lambda x: (-x[1], x[0]))
+        pdf = df.toPandas()
+        assert list(zip(pdf["doc_id"], pdf["score"])) == rows
+        assert [(r.doc_id, r.score) for r in df.limit(3).collect()] \
+            == rows[:3]
+        assert [(r.doc_id, r.score) for r in
+                imp_engine.fetch(df).collect()] == rows

@@ -13,6 +13,7 @@ import contextlib
 import io
 import os
 import sys
+from unittest import mock
 
 sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
 
@@ -66,9 +67,13 @@ def main() -> None:
                      "on bucket + PushedFilters on term + pruned ReadSchema",
                      cap_explain(scan)))
 
-    # 2. full search plan (one chunk shuffle + Arrow scorer + TakeOrdered)
-    sections.append(("Full top-k search plan (D3-D8)",
-                     cap_explain(ix.search("spark join", k=10, mode="AND"))))
+    # 2. full search plan (one chunk shuffle + Arrow scorer + TakeOrdered);
+    # score_partitions forces it — this small index would otherwise be
+    # scored on the driver (section 14)
+    sections.append(("Full top-k search plan (D3-D8), distributed path "
+                     "(score_partitions=4)",
+                     cap_explain(ix.search("spark join", k=10, mode="AND",
+                                           score_partitions=4))))
 
     # 3. build scan column pruning: only (doc_id, text) read from docs
     from parser_indexer_spark.analyze import TOKENIZE_TF_SCHEMA, tokenize_tf_batches
@@ -88,10 +93,12 @@ def main() -> None:
                      cap_explain(relops.project_filter(spark, "/root/testdata/sf0.001"))))
 
     # 5. filtered search: broadcast-into-scorer path must NOT semi-join
-    filtered = ix.search("spark join", k=10, doc_filter="role = 'assistant'")
+    filtered = ix.search("spark join", k=10, doc_filter="role = 'assistant'",
+                         score_partitions=4)
     sections.append(("Filtered top-k search (D9): allowed set broadcast into "
                      "the scorer — expect NO LeftSemi join, same "
-                     "TakeOrderedAndProject shape as the unfiltered plan",
+                     "TakeOrderedAndProject shape as the unfiltered plan "
+                     "(score_partitions=4)",
                      cap_explain(filtered)))
 
     # 6. LSH near-dup: candidates via equi-joins only — never a cartesian
@@ -104,8 +111,10 @@ def main() -> None:
     # 7. phrase query: same one-shuffle chunk plan, pos_enc in ReadSchema
     sections.append(("Phrase top-k plan (D15): same pruned scan + single "
                      "chunk exchange as search(); ReadSchema additionally "
-                     "carries pos_enc (positional payload)",
-                     cap_explain(ix.phrase("spark join", k=10))))
+                     "carries pos_enc (positional payload) "
+                     "(score_partitions=4)",
+                     cap_explain(ix.phrase("spark join", k=10,
+                                           score_partitions=4))))
 
     # 8. r4: multi-table ANN — ONE embeddings scan with an OR predicate
     # (the r3 16-way union was the heaviest bench query; VERDICT r3 #5)
@@ -139,13 +148,19 @@ def main() -> None:
                          cap_explain(imp_scan)))
 
     # 11. r5: facet over search results — full-match scorer feeding a
-    # left-semi join into the doc store and ONE aggregate; nothing sorts
+    # left-semi join into the doc store and ONE aggregate; nothing sorts.
+    # search_facets takes no score_partitions: the driver path's size gate
+    # is turned off for this plan, which is what a scan above one scoring
+    # task's quota runs
+    with mock.patch.object(Index, "_scan_fits", return_value=False):
+        facets = cap_explain(ix.search_facets("spark join",
+                                              ["role", "tool"]))
     sections.append(("search_facets (D23, r5): expect the mapInPandas "
                      "scorer -> left-semi join into the docs scan -> one "
                      "partial+final HashAggregate; NO TakeOrderedAndProject,"
-                     " NO global Sort (the full-match-set path)",
-                     cap_explain(ix.search_facets("spark join",
-                                                  ["role", "tool"]))))
+                     " NO global Sort (the full-match-set path; size gate "
+                     "off, as for a scan above one scoring task's quota)",
+                     facets))
 
     # 12. r6: language ID as ONE Arrow/numpy kernel pass — no Generate,
     # no join, no aggregate (the r5 explode+join plan became a single
@@ -163,6 +178,15 @@ def main() -> None:
                      "Generate, no HashAggregate",
                      cap_explain(relops.minhash_signature(
                          spark, "/root/testdata/sf0.001"))))
+
+    # 14. small scan scored on the driver: the same query as section 2
+    # without score_partitions reads far fewer postings than one scoring
+    # task's quota, so it ran at call time and returned a local relation
+    driver = cap_explain(ix.search("spark join", k=10, mode="AND"))
+    sections.append(("Small-scan top-k on the driver: expect ONE "
+                     "LocalTableScan — no Exchange, no MapInPandas (the "
+                     "pruned scan was collected and scored in the driver)",
+                     driver))
 
     out = ["# PLANS — physical-plan audit (generated by tools/explain_audit.py)",
            "", "Checks SURVEY.md §4's free-vs-custom claims against the real "
@@ -189,6 +213,10 @@ def main() -> None:
     assert sections[9][1].count("Scan parquet") == 2, \
         "ann_cosine_lsh_multi should scan embeddings exactly once"
     assert "Union" not in sections[9][1]
+    assert "MapInPandas" in sections[1][1] and "Exchange" in sections[1][1]
+    assert "MapInPandas" in facets and "LeftSemi" in facets
+    assert "LocalTableScan" in driver
+    assert "MapInPandas" not in driver and "Exchange" not in driver
     print("plan assertions OK")
 
 
