@@ -429,7 +429,6 @@ def finalize_index(spark: SparkSession, out_dir: str, cfg: EngineConfig,
                      "avg_dl": int(r["sum_dl"] or 0) / max(1, nf)}
     if fields:
         stats["fields"] = fields
-    CATALOG.write_meta(p.stats, stats)
     manifest = {
         "format": "parser-indexer-spark/v1",
         "config": cfg.to_dict(),

@@ -24,6 +24,7 @@ Locally the same module runs with plain `python -m parser_indexer_spark.cli`
 from __future__ import annotations
 
 import argparse
+import dataclasses
 import json
 import sys
 import time
@@ -108,8 +109,12 @@ def main(argv=None) -> int:
     u.add_argument("--index", required=True)
     u.add_argument("--input", required=True, help="parquet batch path")
     u.add_argument("--key-cols", default="conv_id,turn_idx")
-    u.add_argument("--buckets", type=int, default=16)
-    u.add_argument("--partitions", type=int, default=32)
+    u.add_argument("--buckets", type=int, default=None,
+                   help="term-hash partitions of a NEW index (default 16);"
+                        " an existing index keeps its own")
+    u.add_argument("--partitions", type=int, default=None,
+                   help="build shuffle width (default 32, or the existing"
+                        " index's)")
 
     m = sub.add_parser("merge", help="compact segments (C10)")
     m.add_argument("--src", required=True)
@@ -231,9 +236,17 @@ def main(argv=None) -> int:
             committed = None
         if committed is not None:
             cfg = EngineConfig.from_dict(committed)
+            if args.buckets not in (None, cfg.n_buckets):
+                print(f"upsert: --buckets {args.buckets} ignored; the index "
+                      f"keeps its committed n_buckets={cfg.n_buckets}",
+                      file=sys.stderr)
+            if args.partitions is not None:
+                # the build's shuffle width: speed only, not the format
+                cfg = dataclasses.replace(cfg,
+                                          build_partitions=args.partitions)
         else:
-            cfg = EngineConfig(n_buckets=args.buckets,
-                               build_partitions=args.partitions)
+            cfg = EngineConfig(n_buckets=args.buckets or 16,
+                               build_partitions=args.partitions or 32)
         batch = spark.read.parquet(args.input)
         t0 = time.perf_counter()
         man = upsert_segment(spark, args.index, batch, cfg,

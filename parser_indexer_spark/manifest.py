@@ -11,9 +11,10 @@ partitioning on (seg, bucket); the swap is config-only):
     <out>/postings/seg=NNN/bucket=BB/   posting blocks (one dir per segment)
     <out>/segments/seg-NNN.json         per-segment manifest row (metrics)
     <out>/dict/bucket=BB/               term dictionary (term, df, cf)
-    <out>/stats.json                    corpus stats (N, sum_dl, avg_dl, ...)
     <out>/_manifest.json                final atomic commit (written LAST;
-                                        readers require it)
+                                        readers require it); also holds
+                                        the corpus stats (N, sum_dl,
+                                        avg_dl, ...)
 
 Readers only trust segments listed in a manifest (the final one, or the
 per-segment rows during resume), so a crashed partial write is invisible —
@@ -82,10 +83,6 @@ class IndexPaths:
         NOT in the sidecar — the lossless early-exit certificate for
         head-term queries [public: Lucene 8 impacts]."""
         return os.path.join(self.impacts, f"seg={seg}")
-
-    @property
-    def stats(self) -> str:
-        return os.path.join(self.root, "stats.json")
 
     @property
     def manifest(self) -> str:

@@ -6,16 +6,24 @@ Engine path:
 
   driver   analyze query with the engine analyzer (D1) -> bucket set ->
            df/idf from the dict table (partition-pruned read, D2) ->
-           stats.json gives N, avgdl
-  plan     postings filter: bucket ISIN (partition pruning) + term ISIN
+           N, avgdl from the manifest's stats
+  plan     Index._plan, once per query before anything runs, from what
+           the query shows (Σ df of the scanned terms against the driver
+           quota, k, df against the sidecar threshold, the filter kind,
+           the cursor, MUST_NOT, top-k or full match): whether to try the
+           impact sidecar, whether WAND prunes and θ is seeded, and the
+           execution path — the driver, or a chunk exchange with its task
+           count (semi-join after scoring for a filter too big to
+           broadcast)
+  scan     postings filter: bucket ISIN (partition pruning) + term ISIN
            (Parquet row-group pruning via min/max on the sorted term column)
   driver   SMALL scans (the scanned terms' summed df fits one scoring task's
            quota for top-k, one task's share of the fan-out for a full
-           match set; no explicit score_partitions, no semi-join filter):
-           ONE Arrow collect of the pruned blocks, the same chunk scorer run in
-           the driver process, the answer returned as a local relation —
-           no exchange, no Python-worker stage. Larger scans take the
-           distributed path below.
+           match set; no semi-join filter): ONE Arrow collect of the pruned
+           blocks, the same chunk scorer run in the driver process, the
+           answer returned as a local relation — no exchange, no
+           Python-worker stage. Larger scans take the distributed path
+           below.
   shuffle  repartition(chunk): every term's blocks for one doc-range chunk
            co-locate (blocks are chunk-aligned by construction, C3), so
            intersection/union is partition-local — ONE small shuffle of
@@ -45,7 +53,7 @@ import os
 import re
 import unicodedata
 import zlib
-from typing import Iterator, Optional
+from typing import Iterator, NamedTuple, Optional
 
 import numpy as np
 import pandas as pd
@@ -80,7 +88,7 @@ THETA_SEED_MIN_BLOCKS = 32_768
 # posting blocks one mapInPandas scoring task is sized to decode: the scan
 # fan-out gives each task about this many, and a top-k query whose whole
 # scan reads no more postings than one task's quota is scored on the
-# driver (see _score_blocks)
+# driver (see Index._plan)
 _TASK_BLOCKS = 2048
 
 # vocabularies at or below this size are loaded into driver memory ONCE per
@@ -97,6 +105,19 @@ _TERM_COLS = ("term", "chunk", "first_doc_id", "last_doc_id", "num_docs",
               "max_tf", "min_dl", "docs_enc", "tfs_enc", "dls_enc")
 _PHRASE_COLS = ("term", "chunk", "first_doc_id", "num_docs", "max_tf",
                 "min_dl", "docs_enc", "tfs_enc", "dls_enc", "pos_enc")
+
+
+class Plan(NamedTuple):
+    """How one query runs, decided by Index._plan before anything
+    executes; term queries, phrases and the full-match methods follow it."""
+    sidecar: bool       # try the impact sidecar's exact top-k first
+    prune: bool         # block-max WAND skips chunks below θ (top-k only)
+    seed_sidecar: bool  # θ0 from the impact sidecars (term queries)
+    seed_scan: bool     # θ0 from exactly scoring the best-bound chunk
+    driver: bool        # score the collected scan here, not in an exchange
+    tasks: int          # scoring tasks of the chunk exchange
+    semi_join: bool     # filter too big to broadcast: semi-join after
+                        # scoring, no top-k heap
 
 
 def bm25_idf(n_docs: int, df: int) -> float:
@@ -129,7 +150,7 @@ class Index:
         self.root = root
         self.manifest = CATALOG.load_snapshot(root)
         self.cfg = EngineConfig.from_dict(self.manifest["config"])
-        self.stats = CATALOG.read_meta(IndexPaths(root).stats)
+        self.stats = self.manifest["stats"]
         self._dict_cache: dict[str, int] = {}
         self._dict_preloaded = False
         # reuse the resolved scan relations across queries (file listing +
@@ -331,59 +352,12 @@ class Index:
         self._seg_df_cache[term] = res
         return res
 
-    def _impact_topk_single(self, term: str, idf_t: float, df_t: int,
-                            k: int):
+    def _impact_topk(self, terms: list, idf: dict, k: int, mode: str):
         """Head-term early exit [public: Lucene 8 impacts / Anh & Moffat
-        2006]: answer a single-term top-k ENTIRELY from the sidecar — zero
-        posting blocks decoded — when the k-th sidecar score strictly
-        beats the exact (max tf, min dl) bound over every posting the
-        sidecar excludes. Returns an ordered k-row DataFrame, or None to
-        fall back to the full scan (coverage gap, bound too tight, or
-        k > sidecar size). Lossless: excluded postings score <= bound <
-        theta under any avgdl, and equal-score ties at the boundary cannot
-        occur because acceptance requires strict separation."""
-        rows = self._impact_rows([term]).get(term)
-        if rows is None or rows.empty:
-            return None
-        bounds = rows[rows["doc_id"] < 0]
-        cands = rows[rows["doc_id"] >= 0]
-        live = self._live_mask(cands["doc_id"].to_numpy(dtype=np.int64))
-        if live is not None:
-            cands = cands[live]          # tombstoned docs never answer
-        covered = {int(s) for s in bounds["seg"]}
-        live = {s["seg"] for s in self.manifest["segments"]}
-        if covered != live:
-            # term may have (un-bounded) postings in an uncovered segment:
-            # allowed only if its per-segment dicts say it is absent there
-            if not self._segs_containing(term).issubset(covered):
-                return None
-        k1, b = self.cfg.k1, self.cfg.b
-        avg = self.stats["avg_dl"]
-        tf = cands["tf"].to_numpy(dtype=np.float64)
-        dl = cands["dl"].to_numpy(dtype=np.float64)
-        d = cands["doc_id"].to_numpy(dtype=np.int64)
-        sc = idf_t * (tf / (tf + k1 * (1.0 - b + b * dl / avg)))
-        order = np.lexsort((d, -sc))
-        d, sc = d[order], sc[order]
-        btf = bounds["tf"].to_numpy(dtype=np.float64)
-        bdl = bounds["dl"].to_numpy(dtype=np.float64)
-        bound = float(np.max(
-            idf_t * (btf / (btf + k1 * (1.0 - b + b * bdl / avg)))))
-        if d.size >= k:
-            theta = float(sc[k - 1])
-            if theta - bound <= _PRUNE_EPS * max(1.0, abs(theta)):
-                return None            # not strictly separated -> full scan
-            d, sc = d[:k], sc[:k]
-        elif d.size < df_t:
-            return None                # incomplete and cannot fill k
-        return self._local(d, sc)
-
-    def _impact_topk_multi(self, terms: list, idf: dict, dfs: dict,
-                           k: int, mode: str):
-        """Multi-term early exit (VERDICT r4 #2): answer an OR/AND top-k
-        ENTIRELY from the sidecars when every query term is sidecar-
-        covered and the k-th FULLY-COVERED doc strictly beats every
-        possible rival. Generalizes _impact_topk_single's acceptance:
+        2006; VERDICT r4 #2]: answer a one-term or OR/AND top-k ENTIRELY
+        from the sidecars — zero posting blocks decoded — when every query
+        term is sidecar-covered and the k-th FULLY-COVERED doc strictly
+        beats every possible rival:
 
         * a doc present in EVERY term's sidecar has an EXACT score (each
           (term, doc) posting carries exact tf/dl), accumulated in the
@@ -396,10 +370,13 @@ class Index:
         * docs in NO sidecar are bounded by Σ_t B_t.
 
         Accept iff ≥ k fully-covered docs exist and the k-th strictly
-        beats the max rival bound (same eps rule as the single-term
-        path); when every term is COMPLETE (Σ B_t = 0) all union scores
-        are exact and the answer needs no separation at all. Returns an
-        ordered ≤ k-row DataFrame or None to fall back to the full scan."""
+        beats the max rival bound by more than the WAND epsilon (equal-
+        score ties at the boundary cannot slip through); when every term
+        is COMPLETE (Σ B_t = 0) all union scores are exact and the answer
+        needs no separation at all, even with tombstoned docs dropped. A
+        single term is the same rule: its total is 0.0 + its exact score.
+        Returns an ordered ≤ k-row DataFrame or None to fall back to the
+        full scan."""
         terms = sorted(terms)
         rows = self._impact_rows(terms)
         live = {s["seg"] for s in self.manifest["segments"]}
@@ -678,10 +655,8 @@ class Index:
         return out
 
     def search(self, query: str, k: int = 10, mode: str = "OR",
-               doc_filter: Optional[str] = None, prune: bool = True,
-               score_partitions: Optional[int] = None,
+               doc_filter: Optional[str] = None,
                after: Optional[tuple] = None,
-               seed_theta: Optional[bool] = None,
                must_not: Optional[list] = None,
                must: Optional[list] = None,
                max_expansions: int = 64) -> DataFrame:
@@ -693,9 +668,8 @@ class Index:
         AT CALL TIME on the driver and returns a local relation, as the
         impact-sidecar fast path does; larger scans, and doc_filters too
         large to broadcast, return the lazy distributed plan (pruned scan
-        -> chunk exchange -> mapInPandas scorer -> top-k).
-        ``score_partitions`` forces the distributed path with that many
-        scoring tasks.
+        -> chunk exchange -> mapInPandas scorer -> top-k). Index._plan
+        makes that choice, and the sidecar and pruning ones, per query.
 
         doc_filter: SQL boolean expression over the docs table's attribute
         columns (conv_id, turn_idx, role, tool, ts) — Solr fq semantics (D9):
@@ -733,9 +707,7 @@ class Index:
         """
         return self._term_query(
             *self._parse_search(query, mode, must, must_not, max_expansions),
-            mode, k=k, doc_filter=doc_filter, prune=prune,
-            score_partitions=score_partitions, after=after,
-            seed_theta=seed_theta)
+            mode, k=k, doc_filter=doc_filter, after=after)
 
     def _parse_search(self, query: str, mode: str, must, must_not,
                       max_expansions: int = 64):
@@ -763,10 +735,8 @@ class Index:
     def _term_query(self, terms, required, excluded, mode: str,
                     field_of: Optional[dict] = None,
                     boosts: Optional[dict] = None, *, k: int = 10,
-                    doc_filter: Optional[str] = None, prune: bool = True,
-                    score_partitions: Optional[int] = None,
+                    doc_filter: Optional[str] = None,
                     after: Optional[tuple] = None,
-                    seed_theta: Optional[bool] = None,
                     sort: bool = True) -> DataFrame:
         """The one term-query entry behind search(), search_fields(),
         query(), the single-term phrase and the full-match methods. Takes
@@ -776,7 +746,8 @@ class Index:
         doc count and avgdl, its idf weighted by ``boosts[field]``; None
         means the text field with index-wide stats, the only case the
         impact sidecar covers. ``sort=False`` returns the full match set
-        (unsorted, unpruned, untruncated; ``k`` is ignored)."""
+        (unsorted, unpruned, untruncated; ``k`` is ignored). The query
+        runs as Index._plan says."""
         terms = sorted(set(terms) | set(required))
         if not terms:
             return self._empty()
@@ -806,23 +777,16 @@ class Index:
             avg_dl = {t: norms[t][1] for t in terms}
             idf = {t: (boosts or {}).get(field_of[t], 1.0)
                    * bm25_idf(norms[t][0], dfs[t]) for t in terms}
-        if (field_of is None and sort and doc_filter is None
-                and after is None and prune and not excl and not req
-                and k <= self.cfg.impact_top
-                and all(dfs[t] > self.cfg.impact_df_threshold
-                        for t in terms)):
-            if len(terms) == 1:
-                fast = self._impact_topk_single(terms[0], idf[terms[0]],
-                                                dfs[terms[0]], k)
-            else:
-                fast = self._impact_topk_multi(terms, idf, dfs, k, mode)
+        plan = self._plan(terms, excl, k=k, sort=sort, doc_filter=doc_filter,
+                          after=after, fielded=field_of is not None,
+                          required=bool(req))
+        if plan.sidecar:
+            fast = self._impact_topk(terms, idf, k, mode)
             if fast is not None:
                 return fast
         return self._search_terms(
-            terms, dfs, idf, avg_dl, k=k, mode=mode, doc_filter=doc_filter,
-            prune=prune, score_partitions=score_partitions,
-            after=after, seed_theta=seed_theta, excl_terms=excl,
-            required=req or None, sort=sort)
+            terms, idf, avg_dl, plan, k=k, mode=mode, doc_filter=doc_filter,
+            after=after, excl_terms=excl, required=req or None, sort=sort)
 
     def _indexed(self, terms) -> list:
         """Sorted unique ``terms`` that occur in the index (df > 0)."""
@@ -849,14 +813,14 @@ class Index:
     def _matches(self, query: str, mode: str, doc_filter: Optional[str],
                  must: Optional[list], must_not: Optional[list]) -> DataFrame:
         """The query's FULL match set: every matching doc with its exact
-        BM25 score, unsorted — pruning, θ seeding, heap truncation, the
-        impact fast path and the global top-k are all off. Tombstones are
+        BM25 score, unsorted — a full-match plan has no pruning, θ seeding,
+        heap truncation, impact fast path or global top-k. Tombstones are
         masked inside the scorer like every other query path. A scan
         within one scoring task's share of the distributed fan-out is
-        scored at call time into a local relation (see _score_blocks)."""
+        scored at call time into a local relation (see Index._plan)."""
         return self._term_query(
             *self._parse_search(query, mode, must, must_not), mode,
-            doc_filter=doc_filter, prune=False, sort=False)
+            doc_filter=doc_filter, sort=False)
 
     def _matched_docs(self, query: str, mode: str,
                       doc_filter: Optional[str], must: Optional[list],
@@ -1077,8 +1041,7 @@ class Index:
 
     def search_fields(self, field_queries: dict, boosts: Optional[dict] = None,
                       k: int = 10, mode: str = "OR",
-                      doc_filter: Optional[str] = None, prune: bool = True,
-                      score_partitions: Optional[int] = None,
+                      doc_filter: Optional[str] = None,
                       after: Optional[tuple] = None,
                       must: Optional[dict] = None,
                       must_not: Optional[dict] = None) -> DataFrame:
@@ -1090,7 +1053,8 @@ class Index:
 
         score(d) = Σ_f boost_f · Σ_{t ∈ q_f} idf(f:t) · tf_norm(tf, dl_f,
         avgdl_f) — BM25 with PER-FIELD length normalization (each fielded
-        posting carries its field's dl; stats.json stores per-field avgdl).
+        posting carries its field's dl; the manifest's stats hold per-field
+        avgdl).
         mode="AND" requires every term of every field to match. Same
         execution paths, truncation, WAND, filters, and paging as
         search(); the boost folds into the per-term idf weight, so the
@@ -1125,16 +1089,11 @@ class Index:
                 field_of.update((t, f) for t in toks)
         excl = [t for f, q in must_not.items()
                 for t in _fielded(f, _analyzed([q], sw))]
-        return self._term_query(
-            terms, req, excl, mode, field_of, boosts, k=k,
-            doc_filter=doc_filter, prune=prune,
-            score_partitions=score_partitions, after=after,
-            seed_theta=None)  # sidecar seed handles per-field avgdl; the
-                              # metadata-agg seed self-disables on dicts
+        return self._term_query(terms, req, excl, mode, field_of, boosts,
+                                k=k, doc_filter=doc_filter, after=after)
 
     def query(self, qs: str, k: int = 10,
-              doc_filter: Optional[str] = None, prune: bool = True,
-              score_partitions: Optional[int] = None,
+              doc_filter: Optional[str] = None,
               after: Optional[tuple] = None,
               max_expansions: int = 64) -> DataFrame:
         """Lucene-classic query-string surface (D1 upgrade, r5) [public:
@@ -1162,8 +1121,7 @@ class Index:
         neg = [c for c in pq.clauses if c.occur == "MUST_NOT"]
         if not pos:
             return self._empty()    # pure-negative matches nothing (Lucene)
-        common = dict(k=k, doc_filter=doc_filter, prune=prune,
-                      score_partitions=score_partitions, after=after)
+        common = dict(k=k, doc_filter=doc_filter, after=after)
         phrases = [c for c in pos if c.kind == "phrase"]
         if phrases:
             if len(pos) != 1:
@@ -1265,19 +1223,19 @@ class Index:
             clause_terms([c for c in pos if c.occur == "MUST"]),
             clause_terms(neg), "OR", **common)
 
-    def _search_terms(self, terms, dfs, idf, avg_dl, k, mode, doc_filter,
-                      prune, score_partitions, after, seed_theta,
-                      excl_terms=None, required=None, sort=True):
+    def _search_terms(self, terms, idf, avg_dl, plan, *, k, mode,
+                      doc_filter, after, excl_terms=(), required=None,
+                      sort=True):
         """Term-query execution over resolved terms (df > 0): the BM25
         chunk scorer on the shared pruned-scan -> scorer -> top-k tail
-        (_score_blocks; driver-side for small scans). ``avg_dl``: scalar,
-        or dict term->avgdl (per-field norms). ``excl_terms``: MUST_NOT
-        terms (doc-id streams only, masking candidates). ``required``:
-        MUST-term subset (mixed Boolean queries); candidates must contain
-        every one of them, the rest still score. ``sort=False``: every
-        match, unsorted."""
+        (_score_blocks), run as ``plan`` says. ``avg_dl``: scalar, or dict
+        term->avgdl (per-field norms). ``excl_terms``: MUST_NOT terms
+        (doc-id streams only, masking candidates). ``required``: MUST-term
+        subset (mixed Boolean queries); candidates must contain every one
+        of them, the rest still score. ``sort=False``: every match,
+        unsorted."""
 
-        def seed(blocks, wide):
+        def seed(blocks):
             # sidecar seed first: one tiny cached pruned read, works for
             # per-field avgdl too; the metadata-agg seed (two jobs) only
             # runs for wide fan-outs the sidecar couldn't seed. With
@@ -1285,55 +1243,94 @@ class Index:
             # fully-covered doc contains every term, so it meets any MUST
             # subset and its exact full sum is an achieved score
             theta0 = self._impact_theta0(
-                terms, idf, avg_dl, k, "AND" if required else mode)
-            if theta0 <= 0.0 and wide:
+                terms, idf, avg_dl, k, "AND" if required else mode) \
+                if plan.seed_sidecar else 0.0
+            if theta0 <= 0.0 and plan.seed_scan:
                 theta0 = self._seed_theta(blocks, terms, idf, avg_dl, k,
                                           mode, required=required)
             return theta0
 
         return self._score_blocks(
-            terms, excl_terms or [], _TERM_COLS,
-            sum(dfs[t] for t in terms) // max(1, self.cfg.block_size),
+            terms, excl_terms, _TERM_COLS,
             functools.partial(_make_scorer, terms=terms, idf=idf,
                               avg_dl=avg_dl, mode=mode, required=required),
-            seed, k=k, doc_filter=doc_filter, prune=prune,
-            score_partitions=score_partitions, after=after,
-            seed_theta=seed_theta, sort=sort)
+            seed, plan, k=k, sort=sort, doc_filter=doc_filter, after=after)
 
-    def _score_blocks(self, terms, excl, columns, q_blocks, make_scorer,
-                      seed, *, k, doc_filter, prune, score_partitions, after,
-                      seed_theta, sort=True) -> DataFrame:
-        """The one execution tail of term and phrase queries: pruned block
-        scan -> streamed chunk scorer -> top-k, on the driver for a small
-        scan, else over one chunk shuffle.
-        ``columns``: the block columns the scorer reads. ``q_blocks``: the
-        query's matched-block estimate, which sizes the fan-out and gates
-        the cross-executor θ seed. ``make_scorer``: the kind's scorer
-        factory, given the run options here. ``seed(blocks, wide)``: the
-        kind's θ0 rule (``wide``: the fan-out is wide enough, or the
-        caller forced seeding), called only when seeding is lossless —
-        pruned, truncated, no broadcast filter, cursor or MUST_NOT (an
-        excluded doc's achieved score is NOT a lower bound of the k-th
-        SURVIVING score). ``sort=False`` (full-match path): return EVERY
-        match unsorted — heap truncation, θ seeding, and the final global
-        top-k all disabled; ``k`` is ignored.
+    def _plan(self, terms, excl, *, k, sort, doc_filter, after,
+              phrase=False, fielded=False, required=False) -> Plan:
+        """How a query runs, decided once before anything executes from
+        what the query shows: its scored ``terms`` and MUST_NOT ``excl``
+        (df > 0; their df from the cached term_stats), ``k``, top-k or full
+        match (``sort``), the filter kind, the ``after`` cursor, and its
+        shape (a ``phrase``, a ``fielded`` query, MUST clauses).
 
-        Driver path: when the caller set no ``score_partitions``, any
-        filter is the broadcast kind, and the scan's postings — Σ df over
-        every scanned term, MUST_NOT and all phrase terms included — fit
-        the driver quota, the scan is collected with ONE Arrow toPandas()
-        and the same scorer runs in this process; the answer is a local
-        relation (top-k in (score desc, doc_id asc) order, or every match
-        unsorted). Its scores are bit-identical to the distributed path's:
-        each chunk is scored by the same code from the same blocks. The
-        quota is one scoring task's (_TASK_BLOCKS blocks) for a top-k
-        scan, whose block-max WAND skips most of it; a full-match scan
-        decodes every posting, which the distributed path would split
-        over its ``np_parts`` tasks, so its quota is one task's share.
-        Measured on a 200k-turn index at local[4]: the driver answers a
-        top-k scan of up to 2x the quota faster and breaks even near 4x,
-        and a full-match scan faster at a quarter of the quota (the
-        share of 4 tasks) and slower at half."""
+        * Top-k keeps a heap and prunes with block-max WAND; a full match
+          does neither, and neither does a filter too big to broadcast
+          (the semi-join after scoring would cut a truncated heap short).
+        * The impact sidecar is tried for an unfielded term query with no
+          MUST, filter, cursor or MUST_NOT whose k fits the sidecar and
+          whose every term has one (df > impact_df_threshold).
+        * θ is seeded only where that is lossless: pruned, no broadcast
+          filter, cursor or MUST_NOT (an excluded doc's achieved score is
+          NOT a lower bound of the k-th SURVIVING score). The sidecar seed
+          is one cached read; the scan seed, two small jobs, waits for a
+          wide fan-out (THETA_SEED_MIN_BLOCKS matched blocks, estimated
+          from the summed df, or a phrase's rarest term).
+        * The scan is scored on the driver — ONE Arrow collect, the same
+          scorer in this process, a local relation back — when its
+          postings (Σ df over every scanned term, MUST_NOT and all phrase
+          terms included) fit the driver quota and no semi-join is needed;
+          else over one chunk exchange. The quota is one scoring task's
+          (_TASK_BLOCKS blocks) for top-k, whose block-max WAND skips most
+          of the scan; a full match decodes every posting, which the
+          exchange splits over its tasks, so its quota is one task's
+          share. Measured on a 200k-turn index at local[4]: the driver
+          answers a top-k scan of up to 2x the quota faster and breaks
+          even near 4x, and a full-match scan faster at a quarter of the
+          quota (the share of 4 tasks) and slower at half.
+        * The exchange's width grows with THIS QUERY's posting volume
+          (VERDICT r1 #2) — never with total index size — capped at 2
+          waves of the cluster's parallelism (r4: each mapInPandas task
+          carries a fixed Python-worker/Arrow cost; the r3 512-blocks-per-
+          task rule chose 113 tasks for a 2-head-term query at local[4]
+          and tripled its latency vs 8 tasks — measured 7.8 s -> 2.2 s).
+          On a 1000-executor cluster the cap, not the quota, binds."""
+        dfs = self.term_stats(list(terms) + list(excl))
+        matched = min(dfs[t] for t in terms) if phrase \
+            else sum(dfs[t] for t in terms)
+        q_blocks = matched // max(1, self.cfg.block_size)
+        allowed_bc, _ = self._resolve_filter(doc_filter)
+        semi_join = doc_filter is not None and allowed_bc is None
+        heap = sort and not semi_join
+        seedable = heap and allowed_bc is None and after is None \
+            and not excl
+        par = self.spark.sparkContext.defaultParallelism
+        tasks = max(4, min(256, 2 * par, q_blocks // _TASK_BLOCKS))
+        quota = _TASK_BLOCKS * self.cfg.block_size // (1 if sort else tasks)
+        return Plan(
+            sidecar=(seedable and not (phrase or fielded or required)
+                     and k <= self.cfg.impact_top
+                     and all(dfs[t] > self.cfg.impact_df_threshold
+                             for t in terms)),
+            prune=heap,
+            seed_sidecar=seedable and not phrase,
+            seed_scan=seedable and q_blocks >= THETA_SEED_MIN_BLOCKS,
+            driver=not semi_join and sum(dfs.values()) <= quota,
+            tasks=tasks, semi_join=semi_join)
+
+    def _score_blocks(self, terms, excl, columns, make_scorer, seed, plan,
+                      *, k, sort, doc_filter, after) -> DataFrame:
+        """The one execution tail of term and phrase queries, run as
+        ``plan`` (Index._plan) says: pruned block scan -> streamed chunk
+        scorer -> top-k, on the driver or over one chunk exchange of
+        ``plan.tasks`` scoring tasks. ``columns``: the block columns the
+        scorer reads. ``make_scorer``: the kind's scorer factory, given the
+        run options here. ``seed(blocks)``: the kind's θ0 under the plan.
+        ``sort=False`` (full match): return EVERY match unsorted; ``k`` is
+        ignored. A driver answer is a local relation (top-k in (score
+        desc, doc_id asc) order, or every match unsorted) whose scores are
+        bit-identical to the exchange's: each chunk is scored by the same
+        code from the same blocks."""
         scanned = list(terms) + list(excl)
         buckets = sorted({term_bucket(t, self.cfg.n_buckets)
                           for t in scanned})
@@ -1341,8 +1338,7 @@ class Index:
         # allowed doc_id set, sorted), so heap truncation + WAND keep
         # bounding the candidate set; only a huge filter side falls back to
         # scoring everything and semi-joining after (VERDICT r1 #1).
-        allowed_bc, truncate, is_empty = self._resolve_filter(doc_filter)
-        truncate = truncate and sort
+        allowed_bc, is_empty = self._resolve_filter(doc_filter)
         if is_empty:
             return self._empty()
         src = self._postings_for_filter(allowed_bc)
@@ -1354,52 +1350,27 @@ class Index:
             .where(F.col("term").isin(scanned))
             .select(*columns)
         )
-        theta0 = 0.0
-        if (prune and truncate and allowed_bc is None and after is None
-                and not excl and seed_theta is not False):
-            theta0 = seed(blocks, seed_theta is True
-                          or q_blocks >= THETA_SEED_MIN_BLOCKS)
         scorer = make_scorer(
-            k1=self.cfg.k1, b=self.cfg.b, k=k, prune=prune and truncate,
-            truncate=truncate, chunk_bits=self.cfg.chunk_bits,
-            allowed_bc=allowed_bc, after=after, theta0=theta0,
-            denied_bc=self._denied(), excl_terms=excl)
-        # scoring width grows with THIS QUERY's posting volume (VERDICT r1
-        # #2) — never with total index size — AND is capped at 2 waves of
-        # the cluster's parallelism (r4: each mapInPandas task carries a
-        # fixed Python-worker/Arrow cost; the r3 512-blocks-per-task rule
-        # chose 113 tasks for a 2-head-term query at local[4] and tripled
-        # its latency vs 8 tasks — measured 7.8 s -> 2.2 s). _TASK_BLOCKS
-        # per task keeps compute >> overhead; on a 1000-executor cluster
-        # the 2x-parallelism cap, not the quota, is the binding limit.
-        par = self.spark.sparkContext.defaultParallelism
-        np_parts = score_partitions or max(
-            4, min(256, 2 * par, q_blocks // _TASK_BLOCKS))
-        semi_join = doc_filter is not None and allowed_bc is None
-        quota = _TASK_BLOCKS * self.cfg.block_size // (1 if sort
-                                                        else np_parts)
-        if (score_partitions is None and not semi_join
-                and self._scan_fits(scanned, quota)):
+            k1=self.cfg.k1, b=self.cfg.b, k=k, prune=plan.prune,
+            truncate=sort and not plan.semi_join,
+            chunk_bits=self.cfg.chunk_bits, allowed_bc=allowed_bc,
+            after=after, theta0=seed(blocks), denied_bc=self._denied(),
+            excl_terms=excl)
+        if plan.driver:
             # the truncated heap comes out in (score desc, doc_id asc)
             # order already; the full-match set needs no order
             return self._local(*_score_local(blocks.toPandas(), scorer))
         cand = (
-            blocks.repartition(np_parts, "chunk")
+            blocks.repartition(plan.tasks, "chunk")
                   .sortWithinPartitions("chunk")
                   .mapInPandas(scorer, "doc_id long, score double")
         )
-        if semi_join:
+        if plan.semi_join:
             cand = cand.join(self._docs_df.where(doc_filter).select("doc_id"),
                              "doc_id", "left_semi")
         if not sort:
             return cand
         return cand.orderBy(F.desc("score"), F.asc("doc_id")).limit(k)
-
-    def _scan_fits(self, terms: list, quota: int) -> bool:
-        """True when a scan of ``terms`` reads no more than ``quota``
-        postings (Σ df, from the cached term_stats) — the size gate of the
-        driver path in _score_blocks."""
-        return sum(self.term_stats(terms).values()) <= quota
 
     def _local(self, docs: np.ndarray, scores: np.ndarray) -> DataFrame:
         """A driver-side answer as a local relation (doc_id long, score
@@ -1415,10 +1386,8 @@ class Index:
     # ----------------------------------------------------------- phrase ---
     def phrase(self, query: str, k: int = 10, slop: int = 0,
                field: str = "text",
-               doc_filter: Optional[str] = None, prune: bool = True,
-               score_partitions: Optional[int] = None,
+               doc_filter: Optional[str] = None,
                after: Optional[tuple] = None,
-               seed_theta: Optional[bool] = None,
                must_not: Optional[list] = None) -> DataFrame:
         """Top-k phrase / ordered-proximity query over positional postings
         (D-phrase) [public: Lucene PhraseQuery / SloppyPhraseScorer].
@@ -1445,8 +1414,7 @@ class Index:
         scanned postings (Σ df over its distinct terms and MUST_NOT words)
         fit one scoring task's quota is scored AT CALL TIME on the driver
         and returns a local relation; larger scans return the lazy
-        chunk-exchange -> mapInPandas plan, which ``score_partitions``
-        forces.
+        chunk-exchange -> mapInPandas plan (Index._plan decides).
         """
         if not self.cfg.positions:
             raise ValueError(
@@ -1458,7 +1426,7 @@ class Index:
         # fielded phrase (field:"exact phrase", Solr analogue): the SAME
         # positional machinery runs over the "<field>:<term>" postings,
         # whose dl and positions are the field's own; BM25 normalizes by
-        # the field's avgdl and doc count (stats.json per-field stats)
+        # the field's avgdl and doc count (the manifest's per-field stats)
         toks = _fielded(field, tokenize_py(query, self.cfg.stopwords))
         norms = self._field_norms(field)
         if not toks or norms is None:
@@ -1468,9 +1436,7 @@ class Index:
         # field as the phrase; their doc-id streams ride the block scan
         # and mask candidates pre-heap, like the term path
         excl = _fielded(field, _analyzed(must_not, self.cfg.stopwords))
-        run = dict(k=k, doc_filter=doc_filter, prune=prune,
-                   score_partitions=score_partitions, after=after,
-                   seed_theta=seed_theta)
+        run = dict(k=k, doc_filter=doc_filter, after=after)
         if len(toks) == 1:
             return self._term_query(
                 toks, [], excl, "OR",
@@ -1483,17 +1449,19 @@ class Index:
         n_docs, avg_dl = norms
         idf_sum = float(sum(bm25_idf(n_docs, dfs[t]) for t in toks))
 
-        def seed(blocks, wide):
-            return self._seed_theta_phrase(blocks, uniq, toks, idf_sum,
-                                           avg_dl, k, slop) if wide else 0.0
+        excl = self._indexed(excl)
+        plan = self._plan(uniq, excl, sort=True, phrase=True, **run)
 
-        # candidate volume is bounded by the rarest term's postings
+        def seed(blocks):
+            return self._seed_theta_phrase(blocks, uniq, toks, idf_sum,
+                                           avg_dl, k, slop) \
+                if plan.seed_scan else 0.0
+
         return self._score_blocks(
-            uniq, self._indexed(excl), _PHRASE_COLS,
-            min(dfs[t] for t in uniq) // max(1, self.cfg.block_size),
+            uniq, excl, _PHRASE_COLS,
             functools.partial(_make_phrase_scorer, phrase_terms=toks,
                               idf_sum=idf_sum, avg_dl=avg_dl, slop=slop),
-            seed, **run)
+            seed, plan, sort=True, **run)
 
     def _postings_for_filter(self, allowed_bc):
         """Segment pruning under doc filters (VERDICT r3 #9): every
@@ -1525,17 +1493,17 @@ class Index:
         return self._postings_pruned[key]
 
     def _resolve_filter(self, doc_filter: Optional[str]):
-        """doc_filter -> (allowed_bc, truncate, is_empty). Selective filters
-        become a cached broadcast sorted-int64 set (Arrow collection, no
-        driver Row objects — ADVICE r2); oversized ones return
-        allowed_bc=None + truncate=False (semi-join fallback)."""
+        """doc_filter -> (allowed_bc, is_empty). Selective filters become
+        a cached broadcast sorted-int64 set (Arrow collection, no driver
+        Row objects — ADVICE r2); oversized ones return allowed_bc=None
+        (semi-join fallback)."""
         if doc_filter is None:
-            return None, True, False
+            return None, False
         if doc_filter in self._filter_bc:
             allowed_bc = self._filter_bc[doc_filter]
             if allowed_bc is None:          # cached "too big" verdict
-                return None, False, False
-            return allowed_bc, True, allowed_bc.value.size == 0
+                return None, False
+            return allowed_bc, allowed_bc.value.size == 0
         head = (self._docs_df.where(doc_filter).select("doc_id")
                 .limit(FILTER_BROADCAST_LIMIT + 1)
                 .toPandas()["doc_id"].to_numpy(dtype=np.int64))
@@ -1556,9 +1524,7 @@ class Index:
                 # documents that it invalidates outstanding DataFrames.
                 old.unpersist(blocking=False)
         self._filter_bc[doc_filter] = allowed_bc
-        if allowed_bc is None:
-            return None, False, False
-        return allowed_bc, True, head.size == 0
+        return allowed_bc, allowed_bc is not None and head.size == 0
 
     def _seed_theta(self, blocks: DataFrame, terms, idf, avg_dl, k,
                     mode, required=None) -> float:

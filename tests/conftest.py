@@ -59,19 +59,57 @@ def engine(spark, index_dir):
     return Index(spark, index_dir)
 
 
+class PlanLog(list):
+    """The plans a patched Index._plan handed out, in call order, and the
+    fields it replaces in each (``set`` changes them for later queries)."""
+
+    def __init__(self, fields):
+        super().__init__()
+        self.fields = dict(fields)
+
+    def set(self, **fields):
+        self.fields.update(fields)
+
+
+def force_plan(monkeypatch, **fields):
+    """Patch Index._plan — the one seam tests use to pick an execution
+    path: every later query runs the plan the planner chose with
+    ``fields`` replaced (see search.Plan). The scorers only see the plain
+    values the plan hands them, so this holds on executors too. Patches
+    stack: a second force_plan edits the first one's plans. Returns the
+    PlanLog."""
+    from parser_indexer_spark.search import Index
+    log = PlanLog(fields)
+    planner = Index._plan
+
+    def forced(self, *args, **kw):
+        plan = planner(self, *args, **kw)._replace(**log.fields)
+        log.append(plan)
+        return plan
+
+    monkeypatch.setattr(Index, "_plan", forced)
+    return log
+
+
+# a plan with no impact sidecar, no θ seed and no WAND pruning that keeps
+# the top-k heap: the exhaustive reference a pruned answer must equal
+EXHAUSTIVE = dict(sidecar=False, prune=False, seed_sidecar=False,
+                  seed_scan=False)
+
+
 @pytest.fixture
 def exchange_path(monkeypatch):
-    """Turn the driver path's size gate off: every query is scored through
-    the distributed path (pruned scan -> chunk exchange -> mapInPandas
-    scorer), as scans above one scoring task's quota are. Returns the list
-    of term lists the gate was asked about, so a test can check that the
-    scorer tail really ran."""
-    from parser_indexer_spark.search import Index
-    asked = []
+    """Score every query through the distributed path (pruned scan ->
+    chunk exchange -> mapInPandas scorer), as scans above one scoring
+    task's quota are, with the planner's task count or the one given by
+    ``exchange_path.set(tasks=n)``. The impact sidecar is off, so every
+    planned query reaches the scorer. Returns the PlanLog, so a test can
+    check that the scorer tail really ran."""
+    return force_plan(monkeypatch, driver=False, sidecar=False)
 
-    def never(self, terms, quota):
-        asked.append(list(terms))
-        return False
 
-    monkeypatch.setattr(Index, "_scan_fits", never)
-    return asked
+@pytest.fixture
+def exhaustive(monkeypatch):
+    """Run every query with the EXHAUSTIVE plan (on whichever path the
+    planner, or an exchange_path fixture requested first, picks)."""
+    return force_plan(monkeypatch, **EXHAUSTIVE)

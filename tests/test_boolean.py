@@ -43,11 +43,12 @@ def test_must_not_same_term_and_mode(engine):
                          must_not=["spark"]).count() == 0
 
 
-def test_must_not_pruned_equals_exhaustive(engine):
+def test_must_not_pruned_equals_exhaustive(engine, request):
     a = [(r.doc_id, r.score) for r in engine.search(
-        "spark join", k=10, must_not=["scan"], prune=True).collect()]
+        "spark join", k=10, must_not=["scan"]).collect()]
+    request.getfixturevalue("exhaustive")
     b = [(r.doc_id, r.score) for r in engine.search(
-        "spark join", k=10, must_not=["scan"], prune=False).collect()]
+        "spark join", k=10, must_not=["scan"]).collect()]
     assert a == b
 
 

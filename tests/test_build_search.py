@@ -17,6 +17,7 @@ from parser_indexer_spark.search import Index
 from parser_indexer_spark.transcripts import synthesize_pandas
 
 from conftest import T_TINY_CFG as CFG  # shared t_tiny index params
+from conftest import force_plan
 
 
 # ------------------------------------------------- §5.3 invariant ----------
@@ -92,6 +93,15 @@ def test_dict_and_stats(spark, index_dir, oracle, engine):
     assert got == oracle.df
 
 
+def test_stats_come_from_the_snapshot(spark, index_dir):
+    """The corpus stats live in the committed manifest only: no separate
+    stats file a reader could see out of step with the snapshot."""
+    import os
+    from parser_indexer_spark.manifest import load_manifest
+    assert not os.path.exists(os.path.join(index_dir, "stats.json"))
+    assert Index(spark, index_dir).stats == load_manifest(index_dir)["stats"]
+
+
 def test_salting_was_exercised(engine):
     assert any(s["n_hot_terms_salted"] > 0 for s in engine.manifest["segments"]), \
         "Zipf corpus must trigger head-term salting (C11)"
@@ -136,9 +146,10 @@ def test_k_exceeds_matches(engine, oracle):
 # ------------------------------------------------- §5.6 BMW ≡ exhaustive ---
 
 @pytest.mark.parametrize("q,mode", QUERIES[:8])
-def test_bmw_equals_exhaustive(engine, q, mode):
-    a = [(r.doc_id, r.score) for r in engine.search(q, k=10, mode=mode, prune=True).collect()]
-    b = [(r.doc_id, r.score) for r in engine.search(q, k=10, mode=mode, prune=False).collect()]
+def test_bmw_equals_exhaustive(engine, request, q, mode):
+    a = [(r.doc_id, r.score) for r in engine.search(q, k=10, mode=mode).collect()]
+    request.getfixturevalue("exhaustive")
+    b = [(r.doc_id, r.score) for r in engine.search(q, k=10, mode=mode).collect()]
     assert a == b
 
 
@@ -154,7 +165,7 @@ def test_filter_role(spark, engine, oracle, corpus):
         assert g[1] == pytest.approx(e[1], rel=1e-6)
 
 
-def test_filter_broadcast_keeps_truncation(spark, engine, corpus):
+def test_filter_broadcast_keeps_truncation(spark, engine, corpus, request):
     """Selective filters ride INTO the scorer (broadcast sorted id set), so
     the plan has no post-scoring semi-join and pruning stays on; results
     equal the pruning-off run (WAND upper bounds remain valid under the
@@ -163,9 +174,10 @@ def test_filter_broadcast_keeps_truncation(spark, engine, corpus):
     plan = df._jdf.queryExecution().executedPlan().toString()
     assert "LeftSemi" not in plan  # broadcast path, not the fallback join
     a = [(r.doc_id, r.score) for r in df.collect()]
+    request.getfixturevalue("exhaustive")
     b = [(r.doc_id, r.score) for r in
-         engine.search("spark join", k=10, doc_filter="role = 'assistant'",
-                       prune=False).collect()]
+         engine.search("spark join", k=10,
+                       doc_filter="role = 'assistant'").collect()]
     assert a == b and len(a) == 10
 
 
@@ -258,18 +270,20 @@ def test_scorer_streams_chunk_runs_with_carry():
 
 
 @pytest.mark.parametrize("q,mode", QUERIES[:8])
-def test_theta_seeding_lossless(engine, q, mode):
+def test_theta_seeding_lossless(engine, monkeypatch, q, mode):
     """Cross-executor WAND θ seeding (D8 v2): forcing the driver-side seed
     must return exactly the unseeded results — θ0 is an achieved k-th score,
     so pruning against it is lossless."""
-    a = [(r.doc_id, r.score) for r in
-         engine.search(q, k=10, mode=mode, seed_theta=True).collect()]
-    b = [(r.doc_id, r.score) for r in
-         engine.search(q, k=10, mode=mode, seed_theta=False).collect()]
-    assert a == b
+    def run(**plan):
+        with monkeypatch.context() as mp:
+            force_plan(mp, **plan)
+            return [(r.doc_id, r.score) for r in
+                    engine.search(q, k=10, mode=mode).collect()]
+
+    assert run(seed_scan=True) == run(seed_sidecar=False, seed_scan=False)
 
 
-def test_search_after_deep_paging(engine):
+def test_search_after_deep_paging(engine, request):
     """D11 cursorMark analogue on the BM25 path: page1 + page2-via-cursor
     == one k=20 search; the cursor round-trips exactly (deterministic
     float64 scores), and pruning stays lossless under the cursor."""
@@ -279,10 +293,6 @@ def test_search_after_deep_paging(engine):
     p2 = [(r.doc_id, r.score) for r in
           engine.search("spark join", k=10, after=cursor).collect()]
     assert p1 + p2 == full
-    p2_noprune = [(r.doc_id, r.score) for r in
-                  engine.search("spark join", k=10, after=cursor,
-                                prune=False).collect()]
-    assert p2 == p2_noprune
     # paging composes with filters
     f1 = [(r.doc_id, r.score) for r in
           engine.search("spark join", k=20, doc_filter="role = 'user'").collect()]
@@ -291,6 +301,10 @@ def test_search_after_deep_paging(engine):
           engine.search("spark join", k=10, doc_filter="role = 'user'",
                         after=fc).collect()]
     assert f1[:10] + f2 == f1
+    request.getfixturevalue("exhaustive")
+    p2_noprune = [(r.doc_id, r.score) for r in
+                  engine.search("spark join", k=10, after=cursor).collect()]
+    assert p2 == p2_noprune
 
 
 def test_stopword_index_end_to_end(spark, corpus, tmp_path):

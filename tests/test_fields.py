@@ -13,6 +13,8 @@ from parser_indexer_spark.build import build_index
 from parser_indexer_spark.config import EngineConfig
 from parser_indexer_spark.search import Index
 
+from conftest import EXHAUSTIVE, force_plan
+
 
 @pytest.fixture(scope="module")
 def fielded(spark, corpus, tmp_path_factory):
@@ -113,17 +115,17 @@ def test_unknown_field_rejected(fielded):
         fielded.search_fields({"text": "spark", "nosuch": "x"})
 
 
-def test_pruning_lossless_and_parallelism_invariant(fielded):
+def test_pruning_lossless_and_parallelism_invariant(fielded, monkeypatch):
     fq = {"text": "spark join", "role": "assistant"}
-    a = [(r.doc_id, r.score) for r in
-         fielded.search_fields(fq, boosts={"role": 2.0}, k=10).collect()]
-    b = [(r.doc_id, r.score) for r in
-         fielded.search_fields(fq, boosts={"role": 2.0}, k=10,
-                               prune=False).collect()]
-    c = [(r.doc_id, r.score) for r in
-         fielded.search_fields(fq, boosts={"role": 2.0}, k=10,
-                               score_partitions=2).collect()]
-    assert a == b == c
+
+    def run(**plan):
+        with monkeypatch.context() as mp:
+            force_plan(mp, **plan)
+            return [(r.doc_id, r.score) for r in fielded.search_fields(
+                fq, boosts={"role": 2.0}, k=10).collect()]
+
+    a = run()
+    assert a == run(**EXHAUSTIVE) == run(driver=False, tasks=2)
 
 
 def test_plain_search_unaffected_by_fields(fielded, engine):

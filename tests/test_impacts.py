@@ -93,20 +93,18 @@ def test_fast_path_taken_and_rank_identical(imp_engine, imp_oracle,
         assert g[1] == pytest.approx(e[1], rel=1e-9)
 
 
-def test_fast_path_matches_full_scan_many_terms(imp_engine):
+def test_fast_path_matches_full_scan_many_terms(imp_engine, request):
     rows = imp_engine._impacts_df.toPandas()
     terms = rows[rows["doc_id"] >= 0]["term"].drop_duplicates().tolist()[:8]
-    for t in terms:
-        fast = [(r.doc_id, r.score)
-                for r in imp_engine.search(t, k=5).collect()]
-        dfs = imp_engine.term_stats([t])
-        from parser_indexer_spark.search import bm25_idf
-        idf = {t: bm25_idf(imp_engine.stats["n_docs"], dfs[t])}
-        slow = [(r.doc_id, r.score) for r in imp_engine._search_terms(
-            [t], dfs, idf, imp_engine.stats["avg_dl"], k=5, mode="OR",
-            doc_filter=None, prune=False, score_partitions=None,
-            after=None, seed_theta=False).collect()]
-        assert fast == slow, t
+
+    def top5():
+        return [[(r.doc_id, r.score)
+                 for r in imp_engine.search(t, k=5).collect()]
+                for t in terms]
+
+    fast = top5()
+    request.getfixturevalue("exhaustive")
+    assert fast == top5()
 
 
 def test_fallback_when_k_exceeds_sidecar(imp_engine, imp_oracle):
@@ -149,7 +147,7 @@ def test_no_separation_falls_back(spark, tmp_path):
     assert dfs["alpha"] == n
     from parser_indexer_spark.search import bm25_idf
     idf_a = bm25_idf(n, n)
-    assert ix._impact_topk_single("alpha", idf_a, n, 10) is None
+    assert ix._impact_topk(["alpha"], {"alpha": idf_a}, 10, "OR") is None
     got = [r.doc_id for r in ix.search("alpha", k=10).collect()]
     assert got == list(range(10))    # tie-break by doc_id ascending
 
@@ -171,18 +169,18 @@ def test_multi_segment_coverage_gap_falls_back(spark, imp_corpus, tmp_path):
     # term present in seg 1 but below threshold there
     segs = ix._segs_containing("spark")
     assert 1 in segs
-    assert ix._impact_topk_single(
-        "spark", 1.0, ix.term_stats(["spark"])["spark"], 10) is None
+    assert ix._impact_topk(["spark"], {"spark": 1.0}, 10, "OR") is None
     got = [r.doc_id for r in ix.search("spark", k=2100).collect()]
     # every appended doc contains 'spark' and must be found
     assert set(range(2000, 2050)).issubset(set(got))
 
 
-def test_theta0_seed_lossless(imp_engine):
+def test_theta0_seed_lossless(imp_engine, request):
     """Multi-term queries: the sidecar theta0 seed must not change any
     result vs the unpruned exhaustive scan."""
-    for q, mode in [("spark join", "OR"), ("spark join", "AND"),
-                    ("hash agg scan", "OR"), ("window sort spark", "AND")]:
+    queries = [("spark join", "OR"), ("spark join", "AND"),
+               ("hash agg scan", "OR"), ("window sort spark", "AND")]
+    for q, mode in queries:
         terms = sorted(set(q.split()))
         dfs = imp_engine.term_stats(terms)
         live = [t for t in terms if dfs[t] > 0]
@@ -194,11 +192,15 @@ def test_theta0_seed_lossless(imp_engine):
                                            imp_engine.stats["avg_dl"],
                                            10, mode)
             assert th >= 0.0
-        a = [(r.doc_id, r.score) for r in
-             imp_engine.search(q, k=10, mode=mode, prune=True).collect()]
-        b = [(r.doc_id, r.score) for r in
-             imp_engine.search(q, k=10, mode=mode, prune=False).collect()]
-        assert a == b, (q, mode)
+
+    def top10():
+        return [[(r.doc_id, r.score) for r in
+                 imp_engine.search(q, k=10, mode=mode).collect()]
+                for q, mode in queries]
+
+    seeded = top10()
+    request.getfixturevalue("exhaustive")
+    assert seeded == top10()
 
 
 def test_theta0_is_positive_for_head_pair(imp_engine):
@@ -229,8 +231,7 @@ def test_compaction_rewrites_sidecars(spark, imp_corpus, tmp_path):
     assert new_seg["n_impact_terms"] > 0
     ix = Index(spark, out)
     t = "spark"
-    assert ix._impact_topk_single(
-        t, 1.0, ix.term_stats([t])[t], 5) is not None
+    assert ix._impact_topk([t], {t: 1.0}, 5, "OR") is not None
 
 
 # ------------------------------------------------ multi-term early exit ---
@@ -290,7 +291,8 @@ def test_multi_term_fast_path_taken_and_identical(spark, skew_index,
             assert g[1] == pytest.approx(e[1], rel=1e-9)
 
 
-def test_multi_term_fast_path_matches_slow_scan(spark, skew_index):
+def test_multi_term_fast_path_matches_slow_scan(spark, skew_index,
+                                                request):
     """Bit-for-bit score parity with the unpruned exhaustive scan (same
     frozen accumulation order)."""
     from parser_indexer_spark.search import bm25_idf
@@ -299,15 +301,15 @@ def test_multi_term_fast_path_matches_slow_scan(spark, skew_index):
     terms = ["alpha", "beta"]
     dfs = ix.term_stats(terms)
     idf = {t: bm25_idf(ix.stats["n_docs"], dfs[t]) for t in terms}
+    fast = {}
     for mode in ("OR", "AND"):
-        fast = ix._impact_topk_multi(terms, idf, dfs, 10, mode)
-        assert fast is not None, mode
-        slow = ix._search_terms(terms, dfs, idf, ix.stats["avg_dl"], k=10,
-                                mode=mode, doc_filter=None, prune=False,
-                                score_partitions=None, after=None,
-                                seed_theta=False)
-        assert [(r.doc_id, r.score) for r in fast.collect()] == \
-               [(r.doc_id, r.score) for r in slow.collect()], mode
+        got = ix._impact_topk(terms, idf, 10, mode)
+        assert got is not None, mode
+        fast[mode] = [(r.doc_id, r.score) for r in got.collect()]
+    request.getfixturevalue("exhaustive")
+    for mode in ("OR", "AND"):
+        assert fast[mode] == [(r.doc_id, r.score) for r in ix.search(
+            "alpha beta", k=10, mode=mode).collect()], mode
 
 
 def test_multi_term_no_separation_falls_back(spark, tmp_path):
@@ -333,13 +335,13 @@ def test_multi_term_no_separation_falls_back(spark, tmp_path):
     terms = ["alpha", "beta"]
     dfs = ix.term_stats(terms)
     idf = {t: bm25_idf(n, dfs[t]) for t in terms}
-    assert ix._impact_topk_multi(terms, idf, dfs, 10, "OR") is None
+    assert ix._impact_topk(terms, idf, 10, "OR") is None
     got = [r.doc_id for r in
            ix.search("alpha beta", k=10, mode="AND").collect()]
     assert got == list(range(10))
 
 
-def test_multi_term_complete_sidecars_exact(spark, tmp_path):
+def test_multi_term_complete_sidecars_exact(spark, tmp_path, request):
     """impact_top >= df for every term: the sidecars hold ALL postings
     (tf=0 markers only -> zero bounds), so even a flat corpus answers
     driver-side — including an AND result smaller than k."""
@@ -364,16 +366,16 @@ def test_multi_term_complete_sidecars_exact(spark, tmp_path):
     terms = ["alpha", "beta"]
     dfs = ix.term_stats(terms)
     idf = {t: bm25_idf(n, dfs[t]) for t in terms}
+    fast = {}
     for mode, n_match in (("OR", 60), ("AND", 25)):
-        fast = ix._impact_topk_multi(terms, idf, dfs, 50, mode)
-        assert fast is not None, mode
-        slow = ix._search_terms(terms, dfs, idf, ix.stats["avg_dl"], k=50,
-                                mode=mode, doc_filter=None, prune=False,
-                                score_partitions=None, after=None,
-                                seed_theta=False)
-        got = [(r.doc_id, r.score) for r in fast.collect()]
-        assert got == [(r.doc_id, r.score) for r in slow.collect()], mode
-        assert len(got) == min(50, n_match), mode
+        got = ix._impact_topk(terms, idf, 50, mode)
+        assert got is not None, mode
+        fast[mode] = [(r.doc_id, r.score) for r in got.collect()]
+        assert len(fast[mode]) == min(50, n_match), mode
+    request.getfixturevalue("exhaustive")
+    for mode in ("OR", "AND"):
+        assert fast[mode] == [(r.doc_id, r.score) for r in ix.search(
+            "alpha beta", k=50, mode=mode).collect()], mode
 
 
 def test_multi_term_dispatch_guards(spark, skew_index, monkeypatch):
@@ -431,3 +433,50 @@ def test_driver_answers_keep_rank_order(imp_engine, monkeypatch):
             == rows[:3]
         assert [(r.doc_id, r.score) for r in
                 imp_engine.fetch(df).collect()] == rows
+
+
+def test_complete_sidecar_answers_with_tombstones(spark, tmp_path,
+                                                  monkeypatch, request):
+    """A one-term top-k on a COMPLETE sidecar (it holds every posting of
+    the term) is answered from the sidecar even after one of the term's
+    docs is tombstoned and fewer live docs than k remain: the rows equal,
+    bit for bit, the distributed scorer's, and the dead doc never
+    returns."""
+    import pandas as pd
+    texts = ["alpha beta"] * 25 + ["alpha only0"] * 20 + ["beta only1"] * 15
+    pdf = pd.DataFrame({
+        "conv_id": [f"c{i:04d}" for i in range(len(texts))],
+        "turn_idx": [0] * len(texts),
+        "role": ["user"] * len(texts),
+        "text": texts,
+        "tool": [""] * len(texts),
+        "ts": pd.Timestamp("2026-01-01"),
+    })
+    out = str(tmp_path / "complete_dead")
+    cfg = EngineConfig(n_buckets=4, build_partitions=4, chunk_bits=6,
+                       impact_df_threshold=10, impact_top=64)
+    build_index(spark, spark.createDataFrame(pdf), out, cfg, segments=1)
+    ix = Index(spark, out)
+    dead = ix.search("alpha", k=1).collect()[0].doc_id
+    ix.delete_docs([dead])
+    from parser_indexer_spark.search import bm25_idf
+    n_alpha = ix.term_stats(["alpha"])["alpha"]
+    assert n_alpha == 45
+    idf = {"alpha": bm25_idf(ix.stats["n_docs"], n_alpha)}
+    k = 50                                  # > the 44 live alpha docs
+    fast = ix._impact_topk(["alpha"], idf, k, "OR")
+    assert fast is not None
+    rows = [(r.doc_id, r.score) for r in fast.collect()]
+    called = []
+    orig = ix._search_terms
+    monkeypatch.setattr(ix, "_search_terms",
+                        lambda *a, **kw: called.append(1) or orig(*a, **kw))
+    assert [(r.doc_id, r.score)
+            for r in ix.search("alpha", k=k).collect()] == rows
+    assert not called, "the sidecar did not answer"
+    exchange = request.getfixturevalue("exchange_path")
+    scanned = [(r.doc_id, r.score)
+               for r in ix.search("alpha", k=k).collect()]
+    assert called and exchange
+    assert rows == scanned and len(rows) == n_alpha - 1
+    assert dead not in {d for d, _ in rows}

@@ -5,9 +5,8 @@ scoring task's quota is scored at call time on the driver: one Arrow
 collect of the pruned blocks, the query's own chunk scorer, a local
 relation back. Contract under test: that path returns the SAME rows with
 bit-equal scores as the distributed path (chunk exchange -> mapInPandas
-scorer), which ``score_partitions`` forces (or, for the full-match methods,
-the ``exchange_path`` fixture), and the executed plans show which path
-ran.
+scorer), which the ``exchange_path`` fixture forces with FORCED scoring
+tasks, and the executed plans show which path ran.
 """
 
 import shutil
@@ -16,7 +15,7 @@ import pytest
 
 from parser_indexer_spark.search import Index
 
-FORCED = 4   # score_partitions that forces the distributed path
+FORCED = 4   # scoring tasks of the forced distributed path
 
 # (method, args, kwargs): every top-k shape the scorer serves
 TOPK_CASES = [
@@ -50,22 +49,31 @@ def _assert_paths(default, forced, exchange=True):
         assert "Exchange" not in p_def
 
 
+def _exchange(request):
+    """Turn the exchange_path fixture on with FORCED scoring tasks."""
+    log = request.getfixturevalue("exchange_path")
+    log.set(tasks=FORCED)
+    return log
+
+
 @pytest.mark.parametrize("method,args,kw", TOPK_CASES)
-def test_driver_path_equals_exchange_path(engine, method, args, kw):
+def test_driver_path_equals_exchange_path(engine, request, method, args, kw):
     run = getattr(engine, method)
     default = run(*args, k=20, **kw)
-    forced = run(*args, k=20, score_partitions=FORCED, **kw)
+    log = _exchange(request)
+    forced = run(*args, k=20, **kw)
     got, want = _rows(default), _rows(forced)
     assert got == want and got        # same docs, bit-equal scores
     _assert_paths(default, forced)
+    assert [p.tasks for p in log] == [FORCED]
 
 
-def test_after_cursor_driver_equals_exchange(engine):
+def test_after_cursor_driver_equals_exchange(engine, request):
     page1 = _rows(engine.search("spark join", k=10))
     s, d = page1[-1][1], page1[-1][0]
     default = engine.search("spark join", k=10, after=(s, d))
-    forced = engine.search("spark join", k=10, after=(s, d),
-                           score_partitions=FORCED)
+    _exchange(request)
+    forced = engine.search("spark join", k=10, after=(s, d))
     got = _rows(default)
     assert got == _rows(forced) and got
     assert not set(x[0] for x in got) & set(x[0] for x in page1)
@@ -73,8 +81,8 @@ def test_after_cursor_driver_equals_exchange(engine):
 
 
 def test_full_match_driver_equals_exchange(engine, request):
-    """export_matches and search_facets take no score_partitions; the
-    ``exchange_path`` fixture turns the size gate off instead."""
+    """The full-match methods on both paths, the exchange at the
+    planner's own task count."""
     def export():
         return engine.export_matches("spark join", must_not=["scan"])
 
@@ -84,7 +92,7 @@ def test_full_match_driver_equals_exchange(engine, request):
     default_export, default_facets = export(), facets()
     asked = request.getfixturevalue("exchange_path")
     forced_export, forced_facets = export(), facets()
-    assert len(asked) == 2
+    assert len(asked) == 2 and not any(p.prune for p in asked)
 
     got = sorted(_rows(default_export))
     assert got == sorted(_rows(forced_export)) and len(got) > 20
@@ -95,17 +103,21 @@ def test_full_match_driver_equals_exchange(engine, request):
 
 
 def test_tombstoned_handle_driver_equals_exchange(spark, index_dir,
-                                                  tmp_path):
+                                                  tmp_path, request):
     root = str(tmp_path / "idx")
     shutil.copytree(index_dir, root)
     ix = Index(spark, root)
     top = [d for d, _ in _rows(ix.search("spark join", k=3))]
     dead = set(top) | {5, 50, 500}
     ix.delete_docs(sorted(dead))
-    for method, args, kw in TOPK_CASES[:5]:
-        run = getattr(ix, method)
-        default = run(*args, k=20, **kw)
-        forced = run(*args, k=20, score_partitions=FORCED, **kw)
+
+    def run_all():
+        return [getattr(ix, method)(*args, k=20, **kw)
+                for method, args, kw in TOPK_CASES[:5]]
+
+    defaults = run_all()
+    _exchange(request)
+    for default, forced in zip(defaults, run_all()):
         got = _rows(default)
         assert got == _rows(forced) and got
         assert not {d for d, _ in got} & dead

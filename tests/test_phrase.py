@@ -12,6 +12,8 @@ import pytest
 
 from parser_indexer_spark.config import EngineConfig
 
+from conftest import EXHAUSTIVE, force_plan
+
 PHRASES = [
     ("spark join", 0),
     ("join spark", 0),
@@ -34,22 +36,27 @@ def test_phrase_matches_oracle(engine, oracle, q, slop):
         assert g[1] == pytest.approx(e[1], rel=1e-9)
 
 
-def test_phrase_bmw_lossless_and_parallelism_invariant(engine):
+def test_phrase_bmw_lossless_and_parallelism_invariant(engine, monkeypatch):
     a = _rows(engine.phrase("spark join", k=10))
-    assert a == _rows(engine.phrase("spark join", k=10, prune=False))
-    assert a == _rows(engine.phrase("spark join", k=10, score_partitions=2))
-    assert a == _rows(engine.phrase("spark join", k=10, score_partitions=16))
+    for plan in (EXHAUSTIVE, dict(driver=False, tasks=2),
+                 dict(driver=False, tasks=16)):
+        with monkeypatch.context() as mp:
+            force_plan(mp, **plan)
+            assert a == _rows(engine.phrase("spark join", k=10)), plan
 
 
-def test_phrase_theta_seed_lossless(engine):
+def test_phrase_theta_seed_lossless(engine, monkeypatch):
     """Seeded phrase == unseeded == exhaustive (the seed is an achieved
     k-th score of one chunk, so pruning against it is lossless)."""
+    def run(q, slop, **plan):
+        with monkeypatch.context() as mp:
+            force_plan(mp, **plan)
+            return _rows(engine.phrase(q, k=10, slop=slop))
+
     for q, slop in [("spark join", 0), ("filter window", 2)]:
-        seeded = _rows(engine.phrase(q, k=10, slop=slop, seed_theta=True))
-        assert seeded == _rows(engine.phrase(q, k=10, slop=slop,
-                                             seed_theta=False))
-        assert seeded == _rows(engine.phrase(q, k=10, slop=slop,
-                                             prune=False))
+        seeded = run(q, slop, seed_scan=True)
+        assert seeded == run(q, slop, seed_scan=False)
+        assert seeded == run(q, slop, **EXHAUSTIVE)
     # the seed itself is positive when every term co-occurs in some chunk
     from parser_indexer_spark.search import bm25_idf
     uniq = sorted({"spark", "join"})

@@ -12,6 +12,8 @@ from parser_indexer_spark.config import EngineConfig
 from parser_indexer_spark.querystring import parse_query
 from parser_indexer_spark.search import Index
 
+from conftest import EXHAUSTIVE, force_plan
+
 
 def _contains(corpus, term, field="text"):
     return {i for i, t in enumerate(corpus[field])
@@ -86,15 +88,17 @@ def test_must_with_must_not(engine, oracle, corpus):
     assert [g[0] for g in got] == [e[0] for e in exp]
 
 
-def test_must_pruned_and_seeded_equal_exhaustive(engine):
-    base = [(r.doc_id, round(r.score, 9)) for r in
-            engine.search("join scan", k=10, must=["spark"],
-                          prune=False).collect()]
-    for kw in ({"prune": True}, {"prune": True, "seed_theta": True}):
-        got = [(r.doc_id, round(r.score, 9)) for r in
-               engine.search("join scan", k=10, must=["spark"],
-                             **kw).collect()]
-        assert got == base, kw
+def test_must_pruned_and_seeded_equal_exhaustive(engine, monkeypatch):
+    def run(**plan):
+        with monkeypatch.context() as mp:
+            force_plan(mp, **plan)
+            return [(r.doc_id, round(r.score, 9)) for r in
+                    engine.search("join scan", k=10,
+                                  must=["spark"]).collect()]
+
+    base = run(**EXHAUSTIVE)
+    for plan in ({}, {"seed_scan": True}):
+        assert run(**plan) == base, plan
 
 
 def test_must_with_filter_and_paging(engine, oracle, corpus):
@@ -157,11 +161,12 @@ def test_phrase_must_not_masks_without_rescoring(engine, corpus):
                          must_not=["spark"]).count() == 0
 
 
-def test_phrase_must_not_pruned_equals_exhaustive(engine):
+def test_phrase_must_not_pruned_equals_exhaustive(engine, request):
     a = [(r.doc_id, r.score) for r in engine.phrase(
-        "spark join", k=10, must_not=["scan"], prune=True).collect()]
+        "spark join", k=10, must_not=["scan"]).collect()]
+    request.getfixturevalue("exhaustive")
     b = [(r.doc_id, r.score) for r in engine.phrase(
-        "spark join", k=10, must_not=["scan"], prune=False).collect()]
+        "spark join", k=10, must_not=["scan"]).collect()]
     assert a == b
 
 

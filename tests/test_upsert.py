@@ -163,3 +163,29 @@ def test_upsert_bootstraps_fresh_index(spark, tmp_path):
     man = upsert_segment(spark, root, spark.createDataFrame(pdf), CFG)
     assert man["stats"]["n_docs"] == len(pdf)
     assert Index(spark, root).search("spark", k=5).count() > 0
+
+
+def test_cli_upsert_reports_ignored_buckets(spark, tmp_path, monkeypatch,
+                                            capsys):
+    """On an existing index the CLI upsert keeps the committed bucket
+    count and says so when --buckets asks for another, and honours
+    --partitions (the build's shuffle width — speed, not format)."""
+    from parser_indexer_spark import cli, session
+    from parser_indexer_spark.manifest import load_manifest
+    pdf = synthesize_pandas(200)
+    root = str(tmp_path / "idx")
+    build_index(spark, spark.createDataFrame(pdf), root, CFG, segments=1)
+    batch = str(tmp_path / "batch.parquet")
+    new = synthesize_pandas(10, conv_offset=90_000)
+    new.to_parquet(batch)
+    # run in this process on the shared session, which must outlive it
+    monkeypatch.setattr(session, "get_spark", lambda **kw: spark)
+    monkeypatch.setattr(spark, "stop", lambda: None)
+    assert cli.main(["upsert", "--index", root, "--input", batch,
+                     "--buckets", "8", "--partitions", "3"]) == 0
+    err = capsys.readouterr().err
+    assert "--buckets 8 ignored" in err and "n_buckets=4" in err
+    assert "--partitions" not in err
+    cfg = load_manifest(root)["config"]
+    assert cfg["n_buckets"] == 4 and cfg["build_partitions"] == 3
+    assert Index(spark, root).stats["n_docs"] == len(pdf) + len(new)

@@ -53,6 +53,16 @@ def main() -> None:
 
     ix = Index(spark, idx)
     sections = []
+    planner = Index._plan
+
+    def exchange(**fields):
+        """Index._plan patched to score through the chunk exchange — the
+        path of a scan above the driver quota — with ``fields`` replaced
+        too; this small index would otherwise be scored on the driver
+        (section 14)."""
+        return mock.patch.object(
+            Index, "_plan", lambda self, *a, **kw: planner(
+                self, *a, **kw)._replace(driver=False, **fields))
 
     # 1. query-path postings scan: bucket partition pruning + term pushdown
     from parser_indexer_spark.build import term_bucket
@@ -67,13 +77,11 @@ def main() -> None:
                      "on bucket + PushedFilters on term + pruned ReadSchema",
                      cap_explain(scan)))
 
-    # 2. full search plan (one chunk shuffle + Arrow scorer + TakeOrdered);
-    # score_partitions forces it — this small index would otherwise be
-    # scored on the driver (section 14)
+    # 2. full search plan (one chunk shuffle + Arrow scorer + TakeOrdered)
+    with exchange(tasks=4):
+        full = ix.search("spark join", k=10, mode="AND")
     sections.append(("Full top-k search plan (D3-D8), distributed path "
-                     "(score_partitions=4)",
-                     cap_explain(ix.search("spark join", k=10, mode="AND",
-                                           score_partitions=4))))
+                     "(exchange planned, 4 tasks)", cap_explain(full)))
 
     # 3. build scan column pruning: only (doc_id, text) read from docs
     from parser_indexer_spark.analyze import TOKENIZE_TF_SCHEMA, tokenize_tf_batches
@@ -93,12 +101,13 @@ def main() -> None:
                      cap_explain(relops.project_filter(spark, "/root/testdata/sf0.001"))))
 
     # 5. filtered search: broadcast-into-scorer path must NOT semi-join
-    filtered = ix.search("spark join", k=10, doc_filter="role = 'assistant'",
-                         score_partitions=4)
+    with exchange(tasks=4):
+        filtered = ix.search("spark join", k=10,
+                             doc_filter="role = 'assistant'")
     sections.append(("Filtered top-k search (D9): allowed set broadcast into "
                      "the scorer — expect NO LeftSemi join, same "
                      "TakeOrderedAndProject shape as the unfiltered plan "
-                     "(score_partitions=4)",
+                     "(exchange planned, 4 tasks)",
                      cap_explain(filtered)))
 
     # 6. LSH near-dup: candidates via equi-joins only — never a cartesian
@@ -109,12 +118,13 @@ def main() -> None:
                      cap_explain(ndp)))
 
     # 7. phrase query: same one-shuffle chunk plan, pos_enc in ReadSchema
+    with exchange(tasks=4):
+        phrase = ix.phrase("spark join", k=10)
     sections.append(("Phrase top-k plan (D15): same pruned scan + single "
                      "chunk exchange as search(); ReadSchema additionally "
                      "carries pos_enc (positional payload) "
-                     "(score_partitions=4)",
-                     cap_explain(ix.phrase("spark join", k=10,
-                                           score_partitions=4))))
+                     "(exchange planned, 4 tasks)",
+                     cap_explain(phrase)))
 
     # 8. r4: multi-table ANN — ONE embeddings scan with an OR predicate
     # (the r3 16-way union was the heaviest bench query; VERDICT r3 #5)
@@ -149,18 +159,17 @@ def main() -> None:
 
     # 11. r5: facet over search results — full-match scorer feeding a
     # left-semi join into the doc store and ONE aggregate; nothing sorts.
-    # search_facets takes no score_partitions: the driver path's size gate
-    # is turned off for this plan, which is what a scan above one scoring
-    # task's quota runs
-    with mock.patch.object(Index, "_scan_fits", return_value=False):
+    # The exchange keeps the planner's task count, as for a scan above one
+    # scoring task's share
+    with exchange():
         facets = cap_explain(ix.search_facets("spark join",
                                               ["role", "tool"]))
     sections.append(("search_facets (D23, r5): expect the mapInPandas "
                      "scorer -> left-semi join into the docs scan -> one "
                      "partial+final HashAggregate; NO TakeOrderedAndProject,"
-                     " NO global Sort (the full-match-set path; size gate "
-                     "off, as for a scan above one scoring task's quota)",
-                     facets))
+                     " NO global Sort (the full-match-set path; exchange "
+                     "planned, as for a scan above one scoring task's "
+                     "share)", facets))
 
     # 12. r6: language ID as ONE Arrow/numpy kernel pass — no Generate,
     # no join, no aggregate (the r5 explode+join plan became a single
@@ -180,8 +189,8 @@ def main() -> None:
                          spark, "/root/testdata/sf0.001"))))
 
     # 14. small scan scored on the driver: the same query as section 2
-    # without score_partitions reads far fewer postings than one scoring
-    # task's quota, so it ran at call time and returned a local relation
+    # as planned reads far fewer postings than one scoring task's quota,
+    # so it ran at call time and returned a local relation
     driver = cap_explain(ix.search("spark join", k=10, mode="AND"))
     sections.append(("Small-scan top-k on the driver: expect ONE "
                      "LocalTableScan — no Exchange, no MapInPandas (the "
