@@ -238,8 +238,15 @@ def build_index(
     (BASELINE.json:15) — OR ``doc_id_col`` naming an existing unique
     non-negative int64 id (e.g. testdata ``documents.doc_id``), used as-is
     (delta encoding only needs ascending ids; density just compresses best).
+
+    Resume: the docs marker (phase A's record) and the per-segment
+    manifest rows let a crashed build finish; once ``_manifest.json`` is
+    committed the build is done, and later appends and compactions
+    commit only there, so a resumed call returns that snapshot.
     """
     p = IndexPaths(out_dir)
+    if resume and CATALOG.meta_exists(p.manifest):
+        return CATALOG.load_snapshot(out_dir)
     t0 = now()
 
     # Small inputs (bench scale) arrive in fewer scan partitions than cores;
@@ -306,8 +313,8 @@ def build_index(
             "wall_sec": now() - t0,
         }
         # extra_docs_meta rides in the SAME atomic marker write (ADVICE
-        # r3): a streaming bootstrap records last_batch_id here, so a crash
-        # can never leave a marker without its replay-guard key
+        # r3): a streaming bootstrap records last_batch_id here, and the
+        # commit below carries it into the manifest
         if extra_docs_meta:
             docs_meta.update(extra_docs_meta)
         CATALOG.write_meta(p.docs_marker, docs_meta)
@@ -333,7 +340,7 @@ def build_index(
             ids_base.unpersist()
 
     # ---- phase C: dictionary + stats + atomic manifest commit -----------
-    return finalize_index(spark, out_dir, cfg, docs_meta, seg_count,
+    return finalize_index(spark, out_dir, cfg, docs_meta, range(seg_count),
                           input_desc, t0)
 
 
@@ -349,12 +356,15 @@ def finalize_index(spark: SparkSession, out_dir: str, cfg: EngineConfig,
     huge index costs the new segment plus a vocabulary-sized agg
     (VERDICT r2 #1; tested by removing old postings before an append).
 
-    ``segments``: int n (live segs = 0..n-1, the fresh-build/append path)
-    or an explicit list of live segment ids (tiered compaction leaves
-    non-contiguous ids — merge.py compact_segments)."""
+    ``docs_meta`` gives the snapshot's ``n_docs``, its doc-id watermark
+    ``max_doc_id`` and, for streaming writes, ``last_batch_id``; the
+    manifest records the last two, so the next append, upsert or
+    compaction reads its replay guard and next ids from the snapshot.
+
+    ``segments``: the live segment ids (non-contiguous after a
+    compaction)."""
     p = IndexPaths(out_dir)
-    segs = list(range(segments)) if isinstance(segments, int) else \
-        sorted(segments)
+    segs = sorted(segments)
     seg_rows = [CATALOG.read_meta(p.segment_manifest(s)) for s in segs]
     import os as _os
     for s in segs:
@@ -436,8 +446,11 @@ def finalize_index(spark: SparkSession, out_dir: str, cfg: EngineConfig,
         "n_segments": len(segs),
         "stats": stats,
         "segments": seg_rows,
+        "max_doc_id": int(docs_meta["max_doc_id"]),
         "wall_sec_total": now() - t0,
     }
+    if docs_meta.get("last_batch_id") is not None:
+        manifest["last_batch_id"] = int(docs_meta["last_batch_id"])
     if deletes and deletes.get("n"):
         # carry the live tombstone generation across a recommit (appends,
         # partial compactions); a full merge passes None = purged
@@ -588,7 +601,7 @@ def invert_and_write_segment(spark: SparkSession, p: IndexPaths, seg: int,
     """Core inversion (C3-C6, C11): tf rows -> salted term shuffle ->
     sorted block build -> bucket-partitioned write (+ the impact sidecar
     for high-df terms). Returns {"n_hot": .., "n_impact_terms": ..}.
-    Shared by the fresh build and the merge/compaction job (C10)."""
+    Runs inside write_segment, for builds, appends and compactions."""
     lo, hi = doc_range
     span = max(1, hi - lo + 1)
     # skew census: exact df via map-side-combinable agg (shuffle ~|vocab|),
@@ -690,6 +703,22 @@ def write_segment_manifest(spark: SparkSession, p: IndexPaths, seg: int,
     })
 
 
+def write_segment(spark: SparkSession, p: IndexPaths, seg: int,
+                  cfg: EngineConfig, tf: DataFrame,
+                  doc_range: tuple[int, int], t0: float) -> None:
+    """The one segment writer (Lucene's segment flush): ``tf`` rows ->
+    posting blocks, impact sidecar, segment dict and manifest row of
+    segment ``seg``. ``tf`` is persisted once for the census, inversion
+    and sidecar passes. The fresh build, appends and every compaction
+    write their segments here; only the manifest commit makes one live."""
+    tf = tf.persist(StorageLevel.MEMORY_AND_DISK)
+    try:
+        inv = invert_and_write_segment(spark, p, seg, cfg, tf, doc_range)
+        write_segment_manifest(spark, p, seg, cfg, inv, t0)
+    finally:
+        tf.unpersist()
+
+
 def _build_segment(spark: SparkSession, p: IndexPaths, seg: int,
                    cfg: EngineConfig, docs_meta: dict,
                    docs_df: Optional[DataFrame] = None) -> None:
@@ -703,19 +732,14 @@ def _build_segment(spark: SparkSession, p: IndexPaths, seg: int,
                 .select("doc_id", "text", *cfg.fields))
     if docs_df is None and docs_seg.rdd.getNumPartitions() < cfg.build_partitions:
         docs_seg = docs_seg.repartition(cfg.build_partitions)
-    tf = tokenize_with_fields(docs_seg, cfg)
-    tf = tf.persist(StorageLevel.MEMORY_AND_DISK)
-    try:
-        # salt doc-range bounds from phase-A metadata (no extra scan);
-        # approximate bounds are fine — they only spread the salt ranges
-        max_id = int(docs_meta.get("max_doc_id", docs_meta["n_docs"] - 1))
-        s_count = int(docs_meta["segments"])
-        lo = seg * (max_id + 1) // s_count
-        hi = (seg + 1) * (max_id + 1) // s_count - 1 if seg < s_count - 1 else max_id
-        inv = invert_and_write_segment(spark, p, seg, cfg, tf, (lo, hi))
-    finally:
-        tf.unpersist()
-    write_segment_manifest(spark, p, seg, cfg, inv, t0)
+    # salt doc-range bounds from phase-A metadata (no extra scan);
+    # approximate bounds are fine — they only spread the salt ranges
+    max_id = int(docs_meta["max_doc_id"])
+    s_count = int(docs_meta["segments"])
+    lo = seg * (max_id + 1) // s_count
+    hi = (seg + 1) * (max_id + 1) // s_count - 1 if seg < s_count - 1 else max_id
+    write_segment(spark, p, seg, cfg, tokenize_with_fields(docs_seg, cfg),
+                  (lo, hi), t0)
 
 
 # ---------------------------------------------------------------- readers ---

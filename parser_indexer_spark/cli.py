@@ -19,6 +19,8 @@ Usage (cluster):
 
 Locally the same module runs with plain `python -m parser_indexer_spark.cli`
 (the session helper creates a local[N] master when none is configured).
+Called in a process that already has an active Spark session
+(``main([...])``), it runs on that session and leaves it running.
 """
 
 from __future__ import annotations
@@ -122,8 +124,14 @@ def main(argv=None) -> int:
 
     args = ap.parse_args(argv)
 
+    # a caller's running session is used as it is (its confs untouched)
+    # and outlives the command; only a session made here is stopped
+    from pyspark.sql import SparkSession
     from parser_indexer_spark.session import get_spark
-    spark = get_spark(app=f"pis-{args.cmd}", master=args.master)
+    spark = SparkSession.getActiveSession()
+    own = spark is None
+    if own:
+        spark = get_spark(app=f"pis-{args.cmd}", master=args.master)
 
     if args.cmd == "build":
         from parser_indexer_spark.build import build_index
@@ -262,7 +270,8 @@ def main(argv=None) -> int:
         from parser_indexer_spark.merge import merge_index
         manifest = merge_index(spark, args.src, args.dst)
         print(json.dumps({"merged": args.dst, "stats": manifest["stats"]}))
-    spark.stop()
+    if own:
+        spark.stop()
     return 0
 
 

@@ -8,8 +8,12 @@ job §2.C10), committed atomically by re-finalizing the manifest, so readers
 always see a consistent snapshot.
 
 doc_id allocation stays dense and monotone: each batch's ids start at the
-current max_doc_id + 1, assigned within the batch by the same deterministic
-(conv_id, turn_idx) order as the batch build.
+committed manifest's max_doc_id + 1, assigned within the batch by the same
+deterministic (conv_id, turn_idx) order as the batch build. The manifest is
+the only commit record: it holds the doc-id watermark and the streaming
+replay guard (``last_batch_id``), and the next segment id is one above its
+highest live segment, so nothing a write does before its commit is visible
+to, or remembered by, the next write.
 """
 
 from __future__ import annotations
@@ -19,94 +23,76 @@ from typing import Optional
 import pandas as pd
 import pyspark.sql.functions as F
 from pyspark.sql import DataFrame, SparkSession
+from pyspark.storagelevel import StorageLevel
 
 from parser_indexer_spark.build import (
-    build_index, finalize_index, invert_and_write_segment,
-    tokenize_with_fields, write_segment_manifest,
+    build_index, finalize_index, tokenize_with_fields, write_segment,
 )
 from parser_indexer_spark.config import EngineConfig
 from parser_indexer_spark.docids import assign_doc_ids
 from parser_indexer_spark.manifest import CATALOG, IndexPaths, now
 
 
+def _replayed(man: dict, batch_id: Optional[int]) -> bool:
+    """The replay guard: ``batch_id`` is at or below the snapshot's
+    ``last_batch_id``, so its batch is already committed."""
+    return batch_id is not None and man.get("last_batch_id") is not None \
+        and int(batch_id) <= int(man["last_batch_id"])
+
+
 def append_segment(spark: SparkSession, root: str, batch: DataFrame,
                    cfg: EngineConfig, input_desc: str = "",
                    batch_id: Optional[int] = None) -> dict:
     """Append one batch of transcript rows as a new segment; returns the
-    recommitted manifest. Bootstraps a fresh index if none exists.
+    recommitted manifest. With no committed manifest it bootstraps (or
+    resumes a crashed bootstrap) through build_index.
 
     ``batch_id``: streaming batch id (foreachBatch). A replay whose id is
-    already recorded in the docs_marker is a no-op (ADVICE r2): segment-
-    granularity overwrite alone left a window where a replay AFTER the
-    marker update but before the streaming checkpoint commit re-indexed the
-    batch as a brand-new segment with fresh doc_ids."""
+    at or below the manifest's ``last_batch_id`` is a no-op (ADVICE r2).
+    The id, the next doc id and the next segment id all come from the
+    loaded snapshot and are committed with it, so a replay after a crash
+    before the commit rewrites the same ``seg=N`` doc-store partition and
+    segment under the same doc ids (dynamic partition overwrite)."""
     p = IndexPaths(root)
-    if not CATALOG.meta_exists(p.docs_marker):
-        # last_batch_id is part of the bootstrap marker's atomic write
-        # (ADVICE r3): a crash between two separate writes used to leave a
-        # marker with no replay-guard key, so a replayed bootstrap batch
-        # re-indexed the same rows under fresh doc_ids
+    if not CATALOG.meta_exists(p.manifest):
         return build_index(
             spark, batch, root, cfg, segments=1,
             input_desc=input_desc or "bootstrap batch",
             extra_docs_meta=(None if batch_id is None
                              else {"last_batch_id": int(batch_id)}))
+    prior = CATALOG.load_snapshot(root)
+    if _replayed(prior, batch_id):
+        return prior
     t0 = now()
-    meta = CATALOG.read_meta(p.docs_marker)
-    if batch_id is not None and meta.get("last_batch_id") is not None \
-            and int(batch_id) <= int(meta["last_batch_id"]):
-        return (CATALOG.read_meta(p.manifest)
-                if CATALOG.meta_exists(p.manifest) else {})
-    base = int(meta.get("max_doc_id", meta["n_docs"] - 1)) + 1
-    seg = int(meta["segments"])
+    base = int(prior["max_doc_id"]) + 1
+    live = [s["seg"] for s in prior["segments"]]
+    seg = max(live) + 1
 
     ids = assign_doc_ids(batch, partitions=cfg.build_partitions) \
         .withColumn("doc_id", F.col("doc_id") + F.lit(base))
-    from pyspark.storagelevel import StorageLevel
     ids = ids.persist(StorageLevel.MEMORY_AND_DISK)
     try:
         agg = ids.agg(F.count("*"), F.max("doc_id")).first()
         n_new, max_id = int(agg[0]), agg[1]
         if n_new == 0:
-            return (CATALOG.read_meta(p.manifest)
-                    if CATALOG.meta_exists(p.manifest) else {})
-        # dynamic partition overwrite: a replayed batch (crash between the
-        # docs write and the docs_marker update) rewrites ONLY its seg=N
-        # partition instead of appending duplicates — idempotent per segment
+            return prior
+        # dynamic partition overwrite: the replay of an uncommitted batch
+        # rewrites ONLY its seg=N partition — idempotent per segment
         CATALOG.write_table(ids.withColumn("seg", F.lit(seg)), p.docs,
                             partition_by="seg", dynamic=True)
-        tf = tokenize_with_fields(
-            ids.select("doc_id", "text", *cfg.fields), cfg)
-        # persist: the census, inversion, and impact-sidecar passes all
-        # consume tf — cache once instead of re-tokenizing per pass
-        tf = tf.persist(StorageLevel.MEMORY_AND_DISK)
-        try:
-            inv = invert_and_write_segment(spark, p, seg, cfg, tf,
-                                           (base, int(max_id)))
-            write_segment_manifest(spark, p, seg, cfg, inv, t0)
-        finally:
-            tf.unpersist()
+        write_segment(spark, p, seg, cfg,
+                      tokenize_with_fields(
+                          ids.select("doc_id", "text", *cfg.fields), cfg),
+                      (base, int(max_id)), t0)
     finally:
         ids.unpersist()
-
-    meta["n_docs"] = int(meta["n_docs"]) + n_new
-    meta["max_doc_id"] = int(max_id)
-    meta["segments"] = seg + 1
-    if batch_id is not None:
-        meta["last_batch_id"] = int(batch_id)
-    CATALOG.write_meta(p.docs_marker, meta)
-    # live set = the committed manifest's segments + the new one (ids can
-    # be non-contiguous after tiered compaction, so never range(n))
-    if CATALOG.meta_exists(p.manifest):
-        prior = CATALOG.load_snapshot(root)
-        live = [s["seg"] for s in prior["segments"]]
-        deletes = prior.get("deletes")
-    else:
-        live = list(range(seg))
-        deletes = None
+    meta = {"n_docs": int(prior["stats"]["n_docs"]) + n_new,
+            "max_doc_id": int(max_id),
+            "last_batch_id": prior.get("last_batch_id")
+            if batch_id is None else batch_id}
     return finalize_index(spark, root, cfg, meta, live + [seg],
                           input_desc=input_desc or f"append seg {seg}",
-                          t0=t0, deletes=deletes)
+                          t0=t0, deletes=prior.get("deletes"))
 
 
 def upsert_segment(spark: SparkSession, root: str, batch: DataFrame,
@@ -125,23 +111,23 @@ def upsert_segment(spark: SparkSession, root: str, batch: DataFrame,
 
     Replay safety: the ``batch_id`` guard runs BEFORE the tombstone step —
     replaying a fully-committed batch must not tombstone the batch's OWN
-    rows (their keys now match the doc store). A crash between the
-    tombstone commit and the segment append replays idempotently: the
-    matching keys re-match only already-tombstoned ids (union = no-op)
-    and the append proceeds.
+    rows (their keys now match the doc store). Keys match only committed
+    doc-store rows (doc_id <= the snapshot's ``max_doc_id``), so the rows
+    a crashed attempt wrote before its commit are never tombstoned; a
+    crash between the tombstone commit and the segment append replays
+    idempotently: the matching keys re-match only already-tombstoned ids
+    (union = no-op) and the append proceeds.
 
     The batch must be key-unique: Solr's silent last-wins would be
     nondeterministic under shuffle, so duplicate keys raise instead."""
     p = IndexPaths(root)
-    if not CATALOG.meta_exists(p.docs_marker):
+    if not CATALOG.meta_exists(p.manifest):
         return append_segment(spark, root, batch, cfg,
                               input_desc=input_desc or "bootstrap batch",
                               batch_id=batch_id)
-    meta = CATALOG.read_meta(p.docs_marker)
-    if batch_id is not None and meta.get("last_batch_id") is not None \
-            and int(batch_id) <= int(meta["last_batch_id"]):
-        return (CATALOG.read_meta(p.manifest)
-                if CATALOG.meta_exists(p.manifest) else {})
+    prior = CATALOG.load_snapshot(root)
+    if _replayed(prior, batch_id):
+        return prior
     kc = list(key_cols)
     agg = batch.agg(F.count("*"), F.count_distinct(*kc)).first()
     if int(agg[0]) != int(agg[1]):
@@ -152,6 +138,7 @@ def upsert_segment(spark: SparkSession, root: str, batch: DataFrame,
     from parser_indexer_spark.build import read_docs
     from parser_indexer_spark.search import FILTER_BROADCAST_LIMIT, Index
     matched = (read_docs(spark, root)
+               .where(F.col("doc_id") <= int(prior["max_doc_id"]))
                .join(F.broadcast(batch.select(*kc).distinct()), on=kc,
                      how="left_semi")
                .select("doc_id").limit(FILTER_BROADCAST_LIMIT + 1)

@@ -7,18 +7,28 @@ deployment the same layout maps 1:1 onto an Iceberg table with identity
 partitioning on (seg, bucket); the swap is config-only):
 
     <out>/docs/seg=NNN/*.parquet        stored fields (doc_id.. text)
-    <out>/docs/_built.json              phase-A completion marker + lineage
+    <out>/docs/_built.json              build_index's phase-A resume record
+                                        (n_docs, max_doc_id, segments,
+                                        wall_sec); nothing else reads it
     <out>/postings/seg=NNN/bucket=BB/   posting blocks (one dir per segment)
     <out>/segments/seg-NNN.json         per-segment manifest row (metrics)
+    <out>/dict_segs/seg=NNN/bucket=BB/  per-segment term dictionary
+    <out>/impacts/seg=NNN/bucket=BB/    per-segment impact sidecar
     <out>/dict/bucket=BB/               term dictionary (term, df, cf)
+    <out>/deletes/gen=N/                tombstone generation (doc_ids)
     <out>/_manifest.json                final atomic commit (written LAST;
-                                        readers require it); also holds
-                                        the corpus stats (N, sum_dl,
-                                        avg_dl, ...)
+                                        readers require it); the only
+                                        commit record: live segments,
+                                        corpus stats (N, sum_dl, avg_dl,
+                                        ...), tombstone generation, the
+                                        doc-id watermark max_doc_id and
+                                        the streaming last_batch_id
 
 Readers only trust segments listed in a manifest (the final one, or the
 per-segment rows during resume), so a crashed partial write is invisible —
-the same reader-side contract as an Iceberg snapshot.
+the same reader-side contract as an Iceberg snapshot. Writers read their
+next doc id, next segment id and replay guard from the manifest too, so a
+write that crashed before its commit is redone in full by its replay.
 """
 
 from __future__ import annotations

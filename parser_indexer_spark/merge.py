@@ -2,18 +2,21 @@
 
 Reference analogue: Lucene's background ``TieredMergePolicy`` merges
 segments by k-way docID-ordered postings merge [public: Lucene merging].
-Engine analogue: a Spark job that reads every committed segment's posting
-blocks, decodes them back to (term, doc_id, tf, dl) rows (one fused Arrow
-stage), and re-runs the standard inversion (salted term shuffle + sorted
-block rebuild) into a single new segment. Because doc_ids are globally
+Engine analogue: one compaction body (``_compact``) reads the chosen
+segments' posting blocks, decodes them back to (term, doc_id, tf, dl) rows
+(one fused Arrow stage), purges their tombstones, and re-runs the standard
+inversion (salted term shuffle + sorted block rebuild) through the one
+segment writer into a single new segment. Because doc_ids are globally
 unique across segments, the merge is a pure re-layout: the logical index is
 unchanged (tested via per-term posting hashes in tests/test_merge.py), but
 under-full chunk-boundary blocks from many small segments compact into full
 ``block_size`` runs — the same win Lucene gets from merging.
 
-The merged index is written to a NEW root and committed atomically via its
-own manifest, so readers never observe a half-merged state (Iceberg-snapshot
-semantics on the Parquet fallback, SURVEY.md §7 M8).
+``compact_segments`` runs it in place on a select_merges run;
+``merge_index`` is the same compaction of every live segment into a NEW
+root (with a copy of the doc store). Either way the manifest, written last,
+is the commit, so readers never observe a half-merged state
+(Iceberg-snapshot semantics on the Parquet fallback, SURVEY.md §7 M8).
 """
 
 from __future__ import annotations
@@ -25,11 +28,10 @@ from typing import Iterator
 import numpy as np
 import pandas as pd
 import pyspark.sql.functions as F
-from pyspark.sql import DataFrame, SparkSession
+from pyspark.sql import SparkSession
 
 from parser_indexer_spark.build import (
-    TOKENIZE_TF_SCHEMA, finalize_index, invert_and_write_segment,
-    read_postings, write_segment_manifest,
+    TOKENIZE_TF_SCHEMA, finalize_index, read_postings, write_segment,
 )
 from parser_indexer_spark.codec import (decode_blocks, delta_decode_blocks,
                                         varint_slices)
@@ -92,94 +94,21 @@ def _decode_blocks(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
         })
 
 
-def _with_pos_col(blocks: DataFrame) -> DataFrame:
-    """Back-compat shim (ADVICE r3): posting parquet written before the
-    positional format has no pos_enc column at all; add it as a null
-    binary literal so _decode_blocks (and the re-inversion) treat the old
-    segments exactly like a positions=False build."""
-    if "pos_enc" not in blocks.columns:
-        blocks = blocks.withColumn("pos_enc", F.lit(None).cast("binary"))
-    return blocks
-
-
-def _check_pos_cfg(cfg: EngineConfig, src_config: dict, what: str) -> None:
-    """A merge/compaction re-inverts decoded postings: it can only CARRY
-    positions, never create them. A cfg override with positions=True over
-    a source that has none would reach block_pack's byte-join with
-    pos_gaps=None rows (ADVICE r4) — fail fast with the real reason
-    instead."""
-    if cfg.positions and not src_config.get("positions"):
-        raise ValueError(
-            f"{what}: cfg.positions=True but the source index was built "
-            "without positional payloads; positions cannot be synthesized "
-            "from postings — rebuild from the raw input instead")
-
-
 def merge_index(spark: SparkSession, src_root: str, dst_root: str,
                 cfg: EngineConfig | None = None) -> dict:
-    """Compact all of src_root's segments into a single-segment index at
-    dst_root. Returns the new manifest."""
-    t0 = now()
-    src_manifest = CATALOG.load_snapshot(src_root)
-    cfg = cfg or EngineConfig.from_dict(src_manifest["config"])
-    _check_pos_cfg(cfg, src_manifest["config"], "merge_index")
+    """Compact every live segment of src_root into one segment of a new
+    index at dst_root, purging every tombstone. dst_root gets a copy of
+    the doc store; nothing under src_root is written. Returns the new
+    manifest."""
+    man = CATALOG.load_snapshot(src_root)
     sp, dp = IndexPaths(src_root), IndexPaths(dst_root)
-
-    tombstones = None
-    dels = src_manifest.get("deletes")
-    if dels and dels.get("n"):
-        tombstones = read_tombstones(src_root, dels["gen"])
     if os.path.exists(dp.root):
         shutil.rmtree(dp.root)
-    os.makedirs(dp.root)
-    if tombstones is None:
-        # doc store unchanged by a pure merge — re-link it (local fs copy;
-        # on a real deployment this is an Iceberg metadata-only operation)
-        shutil.copytree(sp.docs, dp.docs)
-        docs_meta = CATALOG.read_meta(dp.docs_marker)
-        docs_meta["segments"] = 1
-        CATALOG.write_meta(dp.docs_marker, docs_meta)
-        del_df = None
-    else:
-        # purge pass [public: Lucene merge dropping liveDocs-deleted docs]:
-        # tombstoned rows leave the doc store, the postings (below), the
-        # stats (n_docs here; df/sum_dl via the re-inversion), and the
-        # tombstone set itself — the merged index is the rebuilt-equivalent
-        del_df = spark.createDataFrame(
-            pd.DataFrame({"doc_id": tombstones}), "doc_id long")
-        docs = CATALOG.read_table(spark, sp.docs) \
-                      .join(F.broadcast(del_df), "doc_id", "left_anti")
-        CATALOG.write_table(docs, dp.docs, partition_by="seg")
-        docs_meta = CATALOG.read_meta(sp.docs_marker)
-        # ADVICE r5 (low): count the rows that actually survived instead
-        # of trusting the tombstone count — a bogus id in the tombstone
-        # set must not understate n_docs (idf/avg_dl for every query).
-        # Footer-metadata count over the just-written table: ~free.
-        docs_meta["n_docs"] = CATALOG.read_table(spark, dp.docs).count()
-        docs_meta["segments"] = 1
-        CATALOG.write_meta(dp.docs_marker, docs_meta)
-
-    blocks = _with_pos_col(read_postings(spark, src_root))
-    tf = blocks.select("term", "num_docs", "first_doc_id",
-                       "docs_enc", "tfs_enc", "dls_enc", "pos_enc") \
-               .mapInPandas(_decode_blocks, TOKENIZE_TF_SCHEMA)
-    if del_df is not None:
-        tf = tf.join(F.broadcast(del_df), "doc_id", "left_anti")
-    lo = min(s["doc_lo"] for s in src_manifest["segments"])
-    hi = max(s["doc_hi"] for s in src_manifest["segments"])
-    ts0 = now()
-    from pyspark.storagelevel import StorageLevel
-    tf = tf.persist(StorageLevel.MEMORY_AND_DISK)  # census+invert+impacts
-    try:
-        inv = invert_and_write_segment(spark, dp, 0, cfg, tf, (lo, hi))
-        write_segment_manifest(spark, dp, 0, cfg, inv, ts0)
-    finally:
-        tf.unpersist()
-    manifest = finalize_index(spark, dst_root, cfg, docs_meta, 1,
-                              input_desc=f"merge of {src_root} "
-                                         f"({src_manifest['n_segments']} segments)",
-                              t0=t0)
-    return manifest
+    # the doc store's seg=N partitions; "_" files (the source build's
+    # resume marker, _SUCCESS) are not table data
+    shutil.copytree(sp.docs, dp.docs, ignore=shutil.ignore_patterns("_*"))
+    return _compact(spark, src_root, dst_root, man,
+                    [s["seg"] for s in man["segments"]], cfg)
 
 
 # ------------------------------------------------- tiered merge policy ---
@@ -223,92 +152,105 @@ def compact_segments(spark: SparkSession, root: str, segs: list[int],
     BEFORE the snapshot recommit (a replay overwrites it idempotently), and
     old segment dirs are removed only AFTER the new _manifest.json no
     longer references them — readers always see a consistent snapshot."""
+    return _compact(spark, root, root, CATALOG.load_snapshot(root), segs,
+                    cfg)
+
+
+def _compact(spark: SparkSession, src_root: str, dst_root: str, man: dict,
+             segs: list[int], cfg: EngineConfig | None) -> dict:
+    """The one compaction body: decode the blocks of ``segs`` (live in the
+    snapshot ``man`` of src_root), purge their tombstones, write them as
+    one new segment of dst_root (src_root itself for an in-place
+    compaction, whose doc store dst_root then shares) and commit.
+
+    The new segment takes the next id (one above the highest live one),
+    so a later append never lands on an existing doc-store partition.
+    Purge [public: Lucene liveDocs drop at merge]: tombstones inside the
+    merged segments' doc ranges leave the postings, the doc store and
+    n_docs; a run over every live segment purges every tombstone, a
+    partial run carries the rest into a new generation."""
     t0 = now()
-    man = CATALOG.load_snapshot(root)
     cfg = cfg or EngineConfig.from_dict(man["config"])
-    _check_pos_cfg(cfg, man["config"], "compact_segments")
-    p = IndexPaths(root)
+    # a compaction re-inverts decoded postings: it can only CARRY
+    # positions, never create them (ADVICE r4) — fail fast with the reason
+    if cfg.positions and not man["config"].get("positions"):
+        raise ValueError(
+            "compaction: cfg.positions=True but the source index was built "
+            "without positional payloads; positions cannot be synthesized "
+            "from postings — rebuild from the raw input instead")
+    dp = IndexPaths(dst_root)
     live = {s["seg"]: s for s in man["segments"]}
     segs = sorted(segs)
-    if len(segs) < 2 or any(s not in live for s in segs):
+    if not segs or any(s not in live for s in segs):
         raise ValueError(f"compaction run {segs} not within live segments "
                          f"{sorted(live)}")
-    meta = CATALOG.read_meta(p.docs_marker)
-    new_seg = max(max(live), int(meta["segments"]) - 1) + 1
+    new_seg = max(live) + 1
 
-    blocks = _with_pos_col(read_postings(spark, root, segs=segs))
+    blocks = read_postings(spark, src_root, segs=segs)
+    if "pos_enc" not in blocks.columns:
+        # postings written before the positional format (ADVICE r3): treat
+        # them exactly like a positions=False build
+        blocks = blocks.withColumn("pos_enc", F.lit(None).cast("binary"))
     tf = blocks.select("term", "num_docs", "first_doc_id",
                        "docs_enc", "tfs_enc", "dls_enc", "pos_enc") \
                .mapInPandas(_decode_blocks, TOKENIZE_TF_SCHEMA)
     lo = min(live[s]["doc_lo"] for s in segs)
     hi = max(live[s]["doc_hi"] for s in segs)
-    # partial purge [public: Lucene liveDocs drop at merge]: tombstones
-    # inside the merged segments' doc ranges leave postings + doc store
-    # here; tombstones of untouched segments stay live in a new generation
-    purged = remaining = None
     dels = man.get("deletes")
-    if dels and dels.get("n"):
-        ts = read_tombstones(root, dels["gen"])
-        in_range = np.zeros(ts.size, dtype=bool)
-        for sg in segs:
-            in_range |= (ts >= live[sg]["doc_lo"]) & \
-                        (ts <= live[sg]["doc_hi"])
-        purged, remaining = ts[in_range], ts[~in_range]
-        n_removed = 0
-        if purged.size:
-            del_df = spark.createDataFrame(
-                pd.DataFrame({"doc_id": purged}), "doc_id long")
-            tf = tf.join(F.broadcast(del_df), "doc_id", "left_anti")
-            # doc-store rows of purged ids: rewrite ONLY the doc-store
-            # partitions that contain them (dynamic partition overwrite —
-            # untouched partitions keep their files). ADVICE r5 (low):
-            # count the rows actually removed in the same semi-join pass —
-            # a bogus tombstone id must not understate n_docs.
-            docs = CATALOG.read_table(spark, p.docs)
-            hit_rows = (docs.join(F.broadcast(del_df), "doc_id",
-                                  "left_semi")
-                        .groupBy("seg").count().collect())
-            hit = [r["seg"] for r in hit_rows]
-            n_removed = int(sum(r["count"] for r in hit_rows))
-            if hit:
-                CATALOG.write_table(
-                    docs.where(F.col("seg").isin(hit))
-                        .join(F.broadcast(del_df), "doc_id", "left_anti"),
-                    p.docs, partition_by="seg", dynamic=True)
-    from pyspark.storagelevel import StorageLevel
-    tf = tf.persist(StorageLevel.MEMORY_AND_DISK)  # census+invert+impacts
-    try:
-        inv = invert_and_write_segment(spark, p, new_seg, cfg, tf, (lo, hi))
-        write_segment_manifest(spark, p, new_seg, cfg, inv, t0)
-    finally:
-        tf.unpersist()
+    ts = read_tombstones(src_root, dels["gen"]) \
+        if dels and dels.get("n") else None
+    if ts is None:
+        ts = np.empty(0, dtype=np.int64)
+    in_run = np.full(ts.size, set(segs) == set(live))
+    for sg in segs:
+        in_run |= (ts >= live[sg]["doc_lo"]) & (ts <= live[sg]["doc_hi"])
+    purged, remaining = ts[in_run], ts[~in_run]
+    n_removed = 0
+    if purged.size:
+        del_df = spark.createDataFrame(
+            pd.DataFrame({"doc_id": purged}), "doc_id long")
+        tf = tf.join(F.broadcast(del_df), "doc_id", "left_anti")
+        # rewrite ONLY the doc-store partitions holding purged ids (dynamic
+        # partition overwrite: the others keep their files), and count the
+        # rows actually removed — a bogus tombstone id must not understate
+        # n_docs (ADVICE r5)
+        docs = CATALOG.read_table(spark, dp.docs)
+        hit_rows = (docs.join(F.broadcast(del_df), "doc_id", "left_semi")
+                    .groupBy("seg").count().collect())
+        hit = [r["seg"] for r in hit_rows]
+        n_removed = int(sum(r["count"] for r in hit_rows))
+        if hit:
+            CATALOG.write_table(
+                docs.where(F.col("seg").isin(hit))
+                    .join(F.broadcast(del_df), "doc_id", "left_anti"),
+                dp.docs, partition_by="seg", dynamic=True)
+    write_segment(spark, dp, new_seg, cfg, tf, (lo, hi), t0)
 
-    # allocation watermark: future appends start above the compacted id
-    meta["segments"] = new_seg + 1
     deletes_left = None
-    if purged is not None and purged.size:
-        meta["n_docs"] = int(meta["n_docs"]) - n_removed
-    if remaining is not None and remaining.size:
+    if remaining.size:
         gen = int(dels["gen"]) + 1
         CATALOG.write_table(
             spark.createDataFrame(pd.DataFrame({"doc_id": remaining}),
                                   "doc_id long"),
-            deletes_path(root, gen))
+            deletes_path(dst_root, gen))
         deletes_left = {"gen": gen, "n": int(remaining.size)}
-    CATALOG.write_meta(p.docs_marker, meta)
-    survivors = [s for s in live if s not in set(segs)] + [new_seg]
+    meta = {"n_docs": int(man["stats"]["n_docs"]) - n_removed,
+            "max_doc_id": man["max_doc_id"],
+            "last_batch_id": man.get("last_batch_id")}
     manifest = finalize_index(
-        spark, root, cfg, meta, survivors,
-        input_desc=f"tiered compaction of segs {segs} -> {new_seg}", t0=t0,
-        deletes=deletes_left)
-    for s in segs:  # only after the commit stopped referencing them
-        shutil.rmtree(p.postings_seg(s), ignore_errors=True)
-        shutil.rmtree(p.dict_seg(s), ignore_errors=True)
-        shutil.rmtree(p.impacts_seg(s), ignore_errors=True)
-        os.remove(p.segment_manifest(s))
+        spark, dst_root, cfg, meta,
+        [s for s in live if s not in segs] + [new_seg],
+        input_desc=f"compaction of {src_root} segs {segs} -> {new_seg}",
+        t0=t0, deletes=deletes_left)
+    # drop what the commit stopped referencing; a copy into a new root
+    # has none of it
+    for s in segs:
+        shutil.rmtree(dp.postings_seg(s), ignore_errors=True)
+        shutil.rmtree(dp.dict_seg(s), ignore_errors=True)
+        shutil.rmtree(dp.impacts_seg(s), ignore_errors=True)
+        if os.path.exists(dp.segment_manifest(s)):
+            os.remove(dp.segment_manifest(s))
     if dels and dels.get("n"):
-        # ADVICE r5 (low): the superseded tombstone generation is no
-        # longer referenced by the committed manifest — drop it
-        shutil.rmtree(deletes_path(root, int(dels["gen"])),
+        shutil.rmtree(deletes_path(dst_root, int(dels["gen"])),
                       ignore_errors=True)
     return manifest

@@ -48,6 +48,21 @@ def index_dir(spark, corpus, tmp_path_factory):
 
 
 @pytest.fixture(scope="session")
+def fine_engine(spark, corpus, tmp_path_factory):
+    """t_tiny's corpus on a fine chunk grid (32 docs per chunk), so every
+    query term spans dozens of chunks and block-max pruning has chunks to
+    skip: a lossy skip shows up as a changed top-k here, where t_tiny's
+    four chunks per term can hide it."""
+    from dataclasses import replace
+    from parser_indexer_spark.build import build_index
+    from parser_indexer_spark.search import Index
+    out = str(tmp_path_factory.mktemp("index") / "t_tiny_fine")
+    build_index(spark, spark.createDataFrame(corpus), out,
+                replace(T_TINY_CFG, chunk_bits=5), segments=2)
+    return Index(spark, out)
+
+
+@pytest.fixture(scope="session")
 def oracle(corpus):
     from parser_indexer_spark.oracle import OracleIndex
     return OracleIndex(range(len(corpus)), corpus["text"].tolist())

@@ -202,3 +202,43 @@ def test_delete_masks_fielded_search(spark, corpus, tmp_path):
     ix.delete_docs(dead)
     after = [(r.doc_id, r.score) for r in ix.search_fields(fq, k=10).collect()]
     assert after == [(d, s) for d, s in before if d not in dead][:10]
+
+
+def test_full_compaction_purges_tombstone_without_postings(spark, tmp_path):
+    """A compaction over every live segment purges EVERY tombstone, also
+    one of a doc with no postings (empty text) that lies outside every
+    segment's [doc_lo, doc_hi]: in place and into a new root (merge),
+    the result equals a rebuild over the surviving docs."""
+    import shutil
+    pdf = synthesize_pandas(400).sort_values(
+        ["conv_id", "turn_idx"]).reset_index(drop=True)
+    pdf.loc[len(pdf) - 1, "text"] = ""          # the highest doc_id
+    root = str(tmp_path / "idx")
+    build_index(spark, spark.createDataFrame(pdf), root, CFG, segments=2)
+    dead = [7, len(pdf) - 1]
+    Index(spark, root).delete_docs(dead)
+    surv = pdf.drop(index=dead).assign(doc_id=lambda d: d.index)
+    ref = str(tmp_path / "ref")
+    build_index(spark, spark.createDataFrame(surv), ref, CFG,
+                doc_id_col="doc_id")
+    ir = Index(spark, ref)
+    drop = lambda s: {k: v for k, v in s.items() if k != "n_blocks"}  # noqa: E731
+    inplace = str(tmp_path / "inplace")
+    shutil.copytree(root, inplace)
+    live = [s["seg"] for s in CATALOG.load_snapshot(inplace)["segments"]]
+    for out, m in [
+            (inplace, compact_segments(spark, inplace, live)),
+            (str(tmp_path / "merged"),
+             merge_index(spark, root, str(tmp_path / "merged")))]:
+        assert "deletes" not in m, out
+        docs = read_docs(spark, out)
+        assert docs.count() == len(surv)
+        assert docs.where(docs.doc_id.isin(dead)).count() == 0
+        ix = Index(spark, out)
+        assert drop(ix.stats) == drop(ir.stats), out
+        for q, mode in QUERIES:
+            got = [(r.doc_id, r.score)
+                   for r in ix.search(q, k=10, mode=mode).collect()]
+            exp = [(r.doc_id, r.score)
+                   for r in ir.search(q, k=10, mode=mode).collect()]
+            assert got == exp, (out, q, mode)

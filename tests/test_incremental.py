@@ -48,7 +48,7 @@ def test_append_segments_equal_batch_build(spark, corpus, tmp_path):
 
 
 def test_replayed_batch_docs_idempotent(spark, corpus, tmp_path):
-    """Crash between the docs write and the docs_marker update, then replay
+    """Crash between the docs write and the manifest commit, then replay
     the same batch: the doc store must not contain duplicates (dynamic
     partition overwrite makes the seg=N docs write idempotent; ADVICE r1)."""
     from parser_indexer_spark.manifest import IndexPaths, read_json, write_json
@@ -56,10 +56,10 @@ def test_replayed_batch_docs_idempotent(spark, corpus, tmp_path):
     root = str(tmp_path / "replay")
     s1, s2, _ = _slices(corpus)
     append_segment(spark, root, spark.createDataFrame(s1), CFG)
-    marker_before = read_json(IndexPaths(root).docs_marker)
+    manifest_before = read_json(IndexPaths(root).manifest)
     append_segment(spark, root, spark.createDataFrame(s2), CFG)
-    # simulate the crash: marker rolled back as if batch 2 never committed
-    write_json(IndexPaths(root).docs_marker, marker_before)
+    # simulate the crash: manifest rolled back as if batch 2 never committed
+    write_json(IndexPaths(root).manifest, manifest_before)
     append_segment(spark, root, spark.createDataFrame(s2), CFG)  # replay
 
     docs = read_docs(spark, root).select("conv_id", "turn_idx").toPandas()
@@ -67,6 +67,49 @@ def test_replayed_batch_docs_idempotent(spark, corpus, tmp_path):
     assert not docs.duplicated().any()
     ix = Index(spark, root)
     assert ix.stats["n_docs"] == len(s1) + len(s2)
+
+
+def test_replay_after_crash_before_commit(spark, corpus, tmp_path):
+    """The replay guard lives in the manifest: a batch whose commit never
+    happened (manifest rolled back after its data writes) is redone by its
+    replay exactly once, and a replay after the commit is a no-op."""
+    from parser_indexer_spark.manifest import IndexPaths, read_json, write_json
+
+    root = str(tmp_path / "crash")
+    p = IndexPaths(root)
+    s1, s2, _ = _slices(corpus)
+    append_segment(spark, root, spark.createDataFrame(s1), CFG, batch_id=0)
+    manifest_before = read_json(p.manifest)
+    append_segment(spark, root, spark.createDataFrame(s2), CFG, batch_id=1)
+    write_json(p.manifest, manifest_before)     # the crash before commit
+    for _ in range(2):                          # replay, then a late replay
+        append_segment(spark, root, spark.createDataFrame(s2), CFG,
+                       batch_id=1)
+    docs = read_docs(spark, root).select("doc_id", "conv_id",
+                                         "turn_idx").toPandas()
+    assert len(docs) == len(s1) + len(s2)
+    assert docs["doc_id"].is_unique
+    assert not docs.duplicated(["conv_id", "turn_idx"]).any()
+    assert Index(spark, root).stats["n_docs"] == len(s1) + len(s2)
+
+
+def test_bootstrap_replay_after_crash_before_commit(spark, corpus,
+                                                    tmp_path):
+    """A bootstrap batch whose docs marker and segments were written but
+    whose manifest never was: its replay finishes the build and commits
+    the batch once."""
+    from parser_indexer_spark.manifest import IndexPaths
+
+    root = str(tmp_path / "boot_crash")
+    s1 = _slices(corpus)[0]
+    append_segment(spark, root, spark.createDataFrame(s1), CFG, batch_id=0)
+    os.remove(IndexPaths(root).manifest)        # the crash before commit
+    for _ in range(2):                          # replay, then a late replay
+        append_segment(spark, root, spark.createDataFrame(s1), CFG,
+                       batch_id=0)
+    docs = read_docs(spark, root).select("doc_id").toPandas()["doc_id"]
+    assert len(docs) == len(s1) and docs.is_unique
+    assert Index(spark, root).stats["n_docs"] == len(s1)
 
 
 def test_append_is_o_batch_not_o_index(spark, corpus, tmp_path):

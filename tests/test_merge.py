@@ -2,6 +2,7 @@
 preserves the logical index exactly and compacts under-full blocks."""
 
 import pyspark.sql.functions as F
+import pytest
 
 from parser_indexer_spark.build import build_index, read_postings
 from parser_indexer_spark.config import EngineConfig
@@ -14,12 +15,18 @@ CFG = EngineConfig(n_buckets=4, build_partitions=6, salt_df_threshold=300,
                    n_salts=3, chunk_bits=8)
 
 
-def test_merge_preserves_logical_index(spark, tmp_path):
-    src = str(tmp_path / "src")
-    dst = str(tmp_path / "dst")
+@pytest.fixture(scope="module")
+def merged5(spark, tmp_path_factory):
+    """A five-segment index and its merge: (src, dst, merged manifest)."""
+    base = tmp_path_factory.mktemp("merge5")
+    src, dst = str(base / "src"), str(base / "dst")
     df = spark.createDataFrame(synthesize_pandas(1500))
     build_index(spark, df, src, CFG, segments=5)
-    m = merge_index(spark, src, dst)
+    return src, dst, merge_index(spark, src, dst)
+
+
+def test_merge_preserves_logical_index(spark, merged5):
+    src, dst, m = merged5
     assert m["n_segments"] == 1
     assert _logical_index_hash(src) == _logical_index_hash(dst)
     # compaction actually reduced block count (5 segments of ragged blocks)
@@ -157,3 +164,38 @@ def test_merge_rejects_positions_over_posless_source(spark, tmp_path):
     # the default (cfg from the source manifest) still merges fine
     m = merge_index(spark, src, str(tmp_path / "np_dst2"))
     assert m["n_segments"] == 1
+
+
+def test_append_after_merge_keeps_every_doc(spark, merged5, tmp_path):
+    """The merged segment takes the next segment id, so an append to the
+    merged index writes a new doc-store partition instead of overwriting
+    one copied from the source: every committed doc stays fetchable."""
+    import shutil
+    from parser_indexer_spark.build import read_docs
+    from parser_indexer_spark.incremental import append_segment
+    dst = str(tmp_path / "dst")
+    shutil.copytree(merged5[1], dst)
+    extra = synthesize_pandas(200, conv_offset=10_000)
+    append_segment(spark, dst, spark.createDataFrame(extra), CFG)
+    ix = Index(spark, dst)
+    ids = read_docs(spark, dst).select("doc_id").toPandas()["doc_id"]
+    assert len(ids) == ix.stats["n_docs"]
+    assert ids.is_unique
+    hits = ix.search("spark join", k=50)
+    assert hits.count() == 50
+    assert ix.fetch(hits).count() == 50
+
+
+def test_cli_merge_keeps_callers_session(spark, merged5, tmp_path, capsys):
+    """cli.main in a process with a running session uses that session as
+    it is and leaves it running."""
+    import json
+    from parser_indexer_spark import cli
+    dst = str(tmp_path / "dst")
+    parts = spark.conf.get("spark.sql.shuffle.partitions")
+    assert cli.main(["merge", "--src", merged5[0], "--dst", dst]) == 0
+    out = json.loads(capsys.readouterr().out)
+    assert out["merged"] == dst
+    assert spark.conf.get("spark.sql.shuffle.partitions") == parts
+    assert spark.range(10).count() == 10
+    assert Index(spark, dst).stats["n_docs"] == out["stats"]["n_docs"]

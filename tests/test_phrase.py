@@ -36,27 +36,35 @@ def test_phrase_matches_oracle(engine, oracle, q, slop):
         assert g[1] == pytest.approx(e[1], rel=1e-9)
 
 
-def test_phrase_bmw_lossless_and_parallelism_invariant(engine, monkeypatch):
-    a = _rows(engine.phrase("spark join", k=10))
+def _bmw_lossless(engine, monkeypatch, q, slop):
+    a = _rows(engine.phrase(q, k=10, slop=slop))
     for plan in (EXHAUSTIVE, dict(driver=False, tasks=2),
                  dict(driver=False, tasks=16)):
         with monkeypatch.context() as mp:
             force_plan(mp, **plan)
-            assert a == _rows(engine.phrase("spark join", k=10)), plan
+            assert a == _rows(engine.phrase(q, k=10, slop=slop)), plan
+
+
+def _seed_lossless(engine, monkeypatch, q, slop):
+    def run(**plan):
+        with monkeypatch.context() as mp:
+            force_plan(mp, **plan)
+            return _rows(engine.phrase(q, k=10, slop=slop))
+
+    seeded = run(seed_scan=True)
+    assert seeded == run(seed_scan=False)
+    assert seeded == run(**EXHAUSTIVE)
+
+
+def test_phrase_bmw_lossless_and_parallelism_invariant(engine, monkeypatch):
+    _bmw_lossless(engine, monkeypatch, "spark join", 0)
 
 
 def test_phrase_theta_seed_lossless(engine, monkeypatch):
     """Seeded phrase == unseeded == exhaustive (the seed is an achieved
     k-th score of one chunk, so pruning against it is lossless)."""
-    def run(q, slop, **plan):
-        with monkeypatch.context() as mp:
-            force_plan(mp, **plan)
-            return _rows(engine.phrase(q, k=10, slop=slop))
-
     for q, slop in [("spark join", 0), ("filter window", 2)]:
-        seeded = run(q, slop, seed_scan=True)
-        assert seeded == run(q, slop, seed_scan=False)
-        assert seeded == run(q, slop, **EXHAUSTIVE)
+        _seed_lossless(engine, monkeypatch, q, slop)
     # the seed itself is positive when every term co-occurs in some chunk
     from parser_indexer_spark.search import bm25_idf
     uniq = sorted({"spark", "join"})
@@ -70,6 +78,23 @@ def test_phrase_theta_seed_lossless(engine, monkeypatch):
     th = engine._seed_theta_phrase(blocks, uniq, ["spark", "join"],
                                    idf_sum, engine.stats["avg_dl"], 5, 0)
     assert th > 0.0
+
+
+# On the fine chunk grid the three-term phrase's block-max bound is tight
+# enough that a lossy skip (e.g. against 1.25θ) changes its top-k.
+FINE_PHRASES = [("spark join", 0), ("filter window", 2),
+                ("spark join filter", 3)]
+
+
+@pytest.mark.parametrize("q,slop", FINE_PHRASES)
+def test_phrase_bmw_lossless_fine_grid(fine_engine, monkeypatch, q, slop):
+    _bmw_lossless(fine_engine, monkeypatch, q, slop)
+
+
+@pytest.mark.parametrize("q,slop", FINE_PHRASES)
+def test_phrase_theta_seed_lossless_fine_grid(fine_engine, monkeypatch, q,
+                                              slop):
+    _seed_lossless(fine_engine, monkeypatch, q, slop)
 
 
 def test_phrase_absent_term_empty(engine):

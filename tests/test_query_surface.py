@@ -101,6 +101,11 @@ def test_must_pruned_and_seeded_equal_exhaustive(engine, monkeypatch):
         assert run(**plan) == base, plan
 
 
+def test_must_pruned_and_seeded_equal_exhaustive_fine_grid(fine_engine,
+                                                          monkeypatch):
+    test_must_pruned_and_seeded_equal_exhaustive(fine_engine, monkeypatch)
+
+
 def test_must_with_filter_and_paging(engine, oracle, corpus):
     """required terms compose with doc_filter and the keyset cursor."""
     p1 = engine.search("join scan", k=5, must=["spark"]).collect()
@@ -161,13 +166,24 @@ def test_phrase_must_not_masks_without_rescoring(engine, corpus):
                          must_not=["spark"]).count() == 0
 
 
-def test_phrase_must_not_pruned_equals_exhaustive(engine, request):
+def _phrase_must_not_lossless(engine, request, q, slop):
     a = [(r.doc_id, r.score) for r in engine.phrase(
-        "spark join", k=10, must_not=["scan"]).collect()]
+        q, k=10, slop=slop, must_not=["scan"]).collect()]
     request.getfixturevalue("exhaustive")
     b = [(r.doc_id, r.score) for r in engine.phrase(
-        "spark join", k=10, must_not=["scan"]).collect()]
+        q, k=10, slop=slop, must_not=["scan"]).collect()]
     assert a == b
+
+
+def test_phrase_must_not_pruned_equals_exhaustive(engine, request):
+    _phrase_must_not_lossless(engine, request, "spark join", 0)
+
+
+@pytest.mark.parametrize("q,slop", [("spark join", 0),
+                                    ("spark join filter", 3)])
+def test_phrase_must_not_pruned_equals_exhaustive_fine_grid(
+        fine_engine, request, q, slop):
+    _phrase_must_not_lossless(fine_engine, request, q, slop)
 
 
 # ------------------------------------------------------- fielded must/not --

@@ -103,6 +103,37 @@ def test_upsert_equals_rebuild_after_merge(spark, up_setup, tmp_path):
             assert g[1] == pytest.approx(e[1], rel=1e-9), (q, mode)
 
 
+def test_upsert_replay_after_crash_before_commit(spark, tmp_path):
+    """An upsert whose commits never happened (manifest rolled back after
+    its tombstone and data writes) is redone by its replay exactly once:
+    the keys match only committed rows, so the rows the crashed attempt
+    wrote are not tombstoned."""
+    from parser_indexer_spark.manifest import IndexPaths, read_json, write_json
+    pdf = synthesize_pandas(300)
+    root = str(tmp_path / "crash")
+    p = IndexPaths(root)
+    upsert_segment(spark, root, spark.createDataFrame(pdf), CFG, batch_id=0)
+    repl = pdf.iloc[100:120].copy()
+    repl["text"] = ["replacedmarker spark w%04d" % i for i in range(20)]
+    batch = pd.concat([repl, synthesize_pandas(10, conv_offset=70_000)],
+                      ignore_index=True)
+    manifest_before = read_json(p.manifest)
+    upsert_segment(spark, root, spark.createDataFrame(batch), CFG,
+                   batch_id=1)
+    write_json(p.manifest, manifest_before)     # the crash before commit
+    for _ in range(2):                          # replay, then a late replay
+        man = upsert_segment(spark, root, spark.createDataFrame(batch), CFG,
+                             batch_id=1)
+    assert man["stats"]["n_docs"] == len(pdf) + len(batch)
+    assert man["deletes"]["n"] == len(repl)
+    docs = read_docs(spark, root).select("doc_id", "conv_id",
+                                         "turn_idx").toPandas()
+    assert len(docs) == len(pdf) + len(batch)
+    assert docs["doc_id"].is_unique
+    ix = Index(spark, root)
+    assert ix.search("replacedmarker", k=10 ** 6).count() == len(repl)
+
+
 def test_upsert_duplicate_keys_raise(spark, up_setup):
     root, pdf, batch, logical, man = up_setup
     dup = pd.concat([batch.iloc[:5], batch.iloc[:5]], ignore_index=True)
@@ -165,12 +196,11 @@ def test_upsert_bootstraps_fresh_index(spark, tmp_path):
     assert Index(spark, root).search("spark", k=5).count() > 0
 
 
-def test_cli_upsert_reports_ignored_buckets(spark, tmp_path, monkeypatch,
-                                            capsys):
+def test_cli_upsert_reports_ignored_buckets(spark, tmp_path, capsys):
     """On an existing index the CLI upsert keeps the committed bucket
     count and says so when --buckets asks for another, and honours
     --partitions (the build's shuffle width — speed, not format)."""
-    from parser_indexer_spark import cli, session
+    from parser_indexer_spark import cli
     from parser_indexer_spark.manifest import load_manifest
     pdf = synthesize_pandas(200)
     root = str(tmp_path / "idx")
@@ -178,9 +208,6 @@ def test_cli_upsert_reports_ignored_buckets(spark, tmp_path, monkeypatch,
     batch = str(tmp_path / "batch.parquet")
     new = synthesize_pandas(10, conv_offset=90_000)
     new.to_parquet(batch)
-    # run in this process on the shared session, which must outlive it
-    monkeypatch.setattr(session, "get_spark", lambda **kw: spark)
-    monkeypatch.setattr(spark, "stop", lambda: None)
     assert cli.main(["upsert", "--index", root, "--input", batch,
                      "--buckets", "8", "--partitions", "3"]) == 0
     err = capsys.readouterr().err
