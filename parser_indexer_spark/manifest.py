@@ -38,6 +38,8 @@ import os
 import time
 from dataclasses import dataclass
 
+import pyarrow.dataset as ds
+
 from parser_indexer_spark.config import EngineConfig
 
 
@@ -59,6 +61,10 @@ class IndexPaths:
 
     def postings_seg(self, seg: int) -> str:
         return os.path.join(self.postings, f"seg={seg}")
+
+    def postings_part(self, seg: int, bucket: int) -> str:
+        """One (segment, bucket) partition of the posting blocks."""
+        return os.path.join(self.postings_seg(seg), f"bucket={bucket}")
 
     @property
     def segments_dir(self) -> str:
@@ -114,6 +120,9 @@ class ParquetManifestCatalog:
       * write_table  -> ``df.writeTo(ident).partitionedBy(col).
         createOrReplace()`` / ``.append()``
       * read_table   -> ``spark.read.table(ident)``
+      * list_files / read_arrow -> the partition's data files from the
+        snapshot's manifest list, read with pyarrow (or the Iceberg
+        Python client's scan planning)
       * commit_snapshot / load_snapshot -> Iceberg snapshot commit + the
         table's snapshot metadata (lineage properties)
     then set ``parser_indexer_spark.manifest.CATALOG`` to an instance. The
@@ -135,6 +144,23 @@ class ParquetManifestCatalog:
         if base_path is not None:
             r = r.option("basePath", base_path)
         return r.parquet(*paths)
+
+    def list_files(self, path: str) -> list:
+        """The data files of one table partition directory, sorted; the
+        ``_*`` and ``.*`` entries (commit markers, checksums) are skipped,
+        as Spark's file index skips them. A missing directory has none."""
+        if not os.path.isdir(path):
+            return []
+        return sorted(os.path.join(path, n) for n in os.listdir(path)
+                      if not n.startswith(("_", ".")))
+
+    def read_arrow(self, paths, columns, filter=None):
+        """Read the data files ``paths`` in this process, with no Spark
+        job: an Arrow table of ``columns``, holding the rows where the
+        pyarrow expression ``filter`` holds (row groups whose statistics
+        exclude it are skipped)."""
+        return ds.dataset(list(paths), format="parquet").to_table(
+            columns=list(columns), filter=filter)
 
     # ------------------------------------------- snapshots / manifests ---
     def write_meta(self, path: str, obj: dict) -> None:

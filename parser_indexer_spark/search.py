@@ -19,11 +19,12 @@ Engine path:
            (Parquet row-group pruning via min/max on the sorted term column)
   driver   SMALL scans (the scanned terms' summed df fits one scoring task's
            quota for top-k, one task's share of the fan-out for a full
-           match set; no semi-join filter): ONE Arrow collect of the pruned
-           blocks, the same chunk scorer run in the driver process, the
-           answer returned as a local relation — no exchange, no
-           Python-worker stage. Larger scans take the distributed path
-           below.
+           match set; no semi-join filter): the scanned buckets' parquet
+           files of the handle's live segments are read with Arrow in the
+           driver process (term filter pushed to the row groups), scored
+           by the same chunk scorer, and the answer returned as a local
+           relation — no Spark job, no exchange, no Python-worker stage.
+           Larger scans take the distributed path below.
   shuffle  repartition(chunk): every term's blocks for one doc-range chunk
            co-locate (blocks are chunk-aligned by construction, C3), so
            intersection/union is partition-local — ONE small shuffle of
@@ -57,6 +58,7 @@ from typing import Iterator, NamedTuple, Optional
 
 import numpy as np
 import pandas as pd
+import pyarrow.dataset as ds
 import pyspark.sql.functions as F
 from pyspark.sql import DataFrame, SparkSession
 
@@ -141,9 +143,11 @@ class Index:
 
     A handle is bound to the snapshot it opened: the manifest, stats and
     the dictionary, postings and docs relations (their file listings
-    included) are read once, here. Tombstones written through this handle
-    apply at once; after an incremental update, an upsert or a compaction
-    of the directory, open a new Index to see it."""
+    included) are read once, here, and the driver path reads the posting
+    files of the manifest's segments only, listing each (segment, bucket)
+    directory once. Tombstones written through this handle apply at once;
+    after an incremental update, an upsert or a compaction of the
+    directory, open a new Index to see it."""
 
     def __init__(self, spark: SparkSession, root: str):
         self.spark = spark
@@ -155,7 +159,8 @@ class Index:
         self._dict_preloaded = False
         # reuse the resolved scan relations across queries (file listing +
         # schema inference happen once per Index handle)
-        self._postings_df = read_postings(spark, root)
+        self._postings_df = read_postings(
+            spark, root, segs=[s["seg"] for s in self.manifest["segments"]])
         self._dict_df = read_dict(spark, root)
         self._docs_df = read_docs(spark, root)
         # doc_filter -> broadcast allowed-set cache (ADVICE r2): broadcasts
@@ -179,9 +184,11 @@ class Index:
         # head terms must not grow driver memory without bound
         self._impact_cache: dict[str, pd.DataFrame] = {}
         self._seg_df_cache: dict[str, set] = {}
-        self._postings_pruned: dict[tuple, Optional[DataFrame]] = {}
+        self._postings_pruned: dict[tuple, DataFrame] = {}
         self._impact_cache_max = 256
         self._postings_pruned_max = 8
+        # (seg, bucket) -> its posting files, for the driver path's reads
+        self._part_files: dict[tuple, list] = {}
         # tombstones [public: Lucene liveDocs]: sorted doc_id array of
         # deleted docs, loaded driver-side from the manifest's deletes
         # generation (bounded by FILTER_BROADCAST_LIMIT — delete_docs
@@ -520,12 +527,16 @@ class Index:
         overflow. Fielded "<field>:<term>" entries never expand an
         unfielded clause — the analyzer keeps no ':' in a text term."""
         if self._preload_dict():
-            return sorted(t for t, df in self._dict_cache.items()
-                          if df > 0 and ":" not in t
-                          and match(t))[:max_expansions + 1]
+            return sorted(self._cached_text_terms(match))[:max_expansions + 1]
         return sorted(r["term"] for r in self._dict_df
                       .where(where & ~F.col("term").contains(":"))
                       .select("term").limit(max_expansions + 1).collect())
+
+    def _cached_text_terms(self, match) -> list:
+        """Text terms (df > 0, no field prefix) of the driver-cached
+        dictionary selected by ``match``, unsorted."""
+        return [t for t, df in self._dict_cache.items()
+                if df > 0 and ":" not in t and match(t)]
 
     def expand_fuzzy(self, word: str, max_dist: int = 2,
                      max_expansions: int = 50) -> list[str]:
@@ -539,14 +550,27 @@ class Index:
         CLOSEST terms (Lucene's best-terms rewrite cap — unlike prefix
         expansion, exceeding the cap is normal, not an error; Lucene
         classic caps a DFA enumeration the same way). Text terms only,
-        like every expansion (see _text_terms)."""
+        like every expansion (see _text_terms). A driver-cached dictionary
+        is searched here, with no Spark job; a term whose length differs
+        from the word's by more than ``max_dist`` is cut before its
+        distance is computed."""
         if not word:
             raise ValueError("empty fuzzy term")
+        grams = sorted({word[i:i + 2] for i in range(len(word) - 1)}) \
+            if (len(word) - 1) - 2 * max_dist >= 1 else []
+        if self._preload_dict():
+            near = self._cached_text_terms(
+                lambda t: abs(len(t) - len(word)) <= max_dist
+                and (not grams or any(g in t for g in grams)))
+            hits = sorted((d, t) for d, t in
+                          ((_levenshtein(t, word), t) for t in near)
+                          if d <= max_dist)
+            return [t for _, t in hits[:max_expansions]]
         cand = (self._dict_df.where(~F.col("term").contains(":"))
                 .select("term").distinct())
-        if (len(word) - 1) - 2 * max_dist >= 1:
+        if grams:
             pred = None
-            for g in sorted({word[i:i + 2] for i in range(len(word) - 1)}):
+            for g in grams:
                 c = F.col("term").contains(g)
                 pred = c if pred is None else (pred | c)
             cand = cand.where(pred)
@@ -665,8 +689,9 @@ class Index:
 
         Execution: a query whose scanned postings (the summed df of its
         terms, MUST_NOT words included) fit one scoring task's quota runs
-        AT CALL TIME on the driver and returns a local relation, as the
-        impact-sidecar fast path does; larger scans, and doc_filters too
+        AT CALL TIME on the driver — its posting blocks read with Arrow,
+        no Spark job — and returns a local relation, as the impact-sidecar
+        fast path does; larger scans, and doc_filters too
         large to broadcast, return the lazy distributed plan (pruned scan
         -> chunk exchange -> mapInPandas scorer -> top-k). Index._plan
         makes that choice, and the sidecar and pruning ones, per query.
@@ -808,7 +833,8 @@ class Index:
         return fs.get("n_docs", self.stats["n_docs"]), fs["avg_dl"]
 
     def _empty(self) -> DataFrame:
-        return self.spark.createDataFrame([], "doc_id long, score double")
+        """The empty answer, as a local relation (see _local)."""
+        return self._local(np.empty(0, np.int64), np.empty(0, np.float64))
 
     def _matches(self, query: str, mode: str, doc_filter: Optional[str],
                  must: Optional[list], must_not: Optional[list]) -> DataFrame:
@@ -1276,8 +1302,9 @@ class Index:
           is one cached read; the scan seed, two small jobs, waits for a
           wide fan-out (THETA_SEED_MIN_BLOCKS matched blocks, estimated
           from the summed df, or a phrase's rarest term).
-        * The scan is scored on the driver — ONE Arrow collect, the same
-          scorer in this process, a local relation back — when its
+        * The scan is scored on the driver — its blocks read from the
+          parquet files with Arrow in this process, no Spark job, the same
+          scorer, a local relation back — when its
           postings (Σ df over every scanned term, MUST_NOT and all phrase
           terms included) fit the driver quota and no semi-join is needed;
           else over one chunk exchange. The quota is one scoring task's
@@ -1330,7 +1357,9 @@ class Index:
         ignored. A driver answer is a local relation (top-k in (score
         desc, doc_id asc) order, or every match unsorted) whose scores are
         bit-identical to the exchange's: each chunk is scored by the same
-        code from the same blocks."""
+        code from the same blocks, which the driver reads with Arrow
+        (_read_blocks) instead of a Spark scan. The Spark relation is
+        built only for the exchange and for a scan θ seed."""
         scanned = list(terms) + list(excl)
         buckets = sorted({term_bucket(t, self.cfg.n_buckets)
                           for t in scanned})
@@ -1341,15 +1370,17 @@ class Index:
         allowed_bc, is_empty = self._resolve_filter(doc_filter)
         if is_empty:
             return self._empty()
-        src = self._postings_for_filter(allowed_bc)
-        if src is None:
+        segs = self._segs_for_filter(allowed_bc)
+        if not segs:
             return self._empty()   # filter range misses every live segment
-        blocks = (
-            src
-            .where(F.col("bucket").isin(buckets))
-            .where(F.col("term").isin(scanned))
-            .select(*columns)
-        )
+        blocks = None
+        if plan.seed_scan or not plan.driver:
+            blocks = (
+                self._postings_of(segs)
+                .where(F.col("bucket").isin(buckets))
+                .where(F.col("term").isin(scanned))
+                .select(*columns)
+            )
         scorer = make_scorer(
             k1=self.cfg.k1, b=self.cfg.b, k=k, prune=plan.prune,
             truncate=sort and not plan.semi_join,
@@ -1359,7 +1390,8 @@ class Index:
         if plan.driver:
             # the truncated heap comes out in (score desc, doc_id asc)
             # order already; the full-match set needs no order
-            return self._local(*_score_local(blocks.toPandas(), scorer))
+            return self._local(*_score_local(
+                self._read_blocks(segs, buckets, scanned, columns), scorer))
         cand = (
             blocks.repartition(plan.tasks, "chunk")
                   .sortWithinPartitions("chunk")
@@ -1372,12 +1404,32 @@ class Index:
             return cand
         return cand.orderBy(F.desc("score"), F.asc("doc_id")).limit(k)
 
+    def _read_blocks(self, segs, buckets, terms, columns) -> pd.DataFrame:
+        """The block rows of ``terms`` (hashed to ``buckets``) in segments
+        ``segs``, ``columns`` only: the driver path's scan, read through
+        CATALOG with Arrow in this process — no Spark job. Each (segment,
+        bucket) directory is listed once per handle."""
+        files = []
+        for key in ((s, b) for s in segs for b in buckets):
+            if key not in self._part_files:
+                self._part_files[key] = CATALOG.list_files(
+                    IndexPaths(self.root).postings_part(*key))
+            files += self._part_files[key]
+        if not files:
+            return pd.DataFrame(columns=list(columns))
+        return CATALOG.read_arrow(
+            files, columns, ds.field("term").isin(list(terms))).to_pandas()
+
     def _local(self, docs: np.ndarray, scores: np.ndarray) -> DataFrame:
         """A driver-side answer as a local relation (doc_id long, score
         double) holding the rows in the order given — the small-scan path
         and both impact-sidecar fast paths pass them already ordered, and
         collect()/toPandas()/limit() on a local relation keep that order
-        without a Spark sort."""
+        without a Spark sort. Collecting it starts no Spark job."""
+        if docs.size == 0:
+            # Spark turns an empty pandas frame into an RDD scan, one job
+            # per collect; a one-row local relation cut to none stays local
+            return self._local(np.zeros(1), np.zeros(1)).limit(0)
         return self.spark.createDataFrame(
             pd.DataFrame({"doc_id": docs.astype(np.int64),
                           "score": scores.astype(np.float64)}),
@@ -1463,33 +1515,37 @@ class Index:
                               idf_sum=idf_sum, avg_dl=avg_dl, slop=slop),
             seed, plan, sort=True, **run)
 
-    def _postings_for_filter(self, allowed_bc):
+    def _segs_for_filter(self, allowed_bc) -> list:
         """Segment pruning under doc filters (VERDICT r3 #9): every
         segment manifest row carries its doc_id range [doc_lo, doc_hi];
-        when a broadcast filter's allowed set misses a segment's range
-        entirely, that segment's posting files are excluded from the scan
-        relation (file-level pruning on top of the bucket/term pruning).
-        Returns the postings DataFrame to scan, or None if NO segment can
-        contain an allowed doc. Pruned relations are cached per surviving
-        segment set."""
+        a segment whose range holds no doc of a broadcast filter's allowed
+        set is not scanned (file-level pruning on top of the bucket/term
+        pruning). Returns the ids of the live segments to scan — all of
+        them without a broadcast filter — empty if NO segment can contain
+        an allowed doc. Both execution paths scan these segments."""
         segs_all = self.manifest["segments"]
         if allowed_bc is None or len(segs_all) <= 1:
-            return self._postings_df
+            return [s["seg"] for s in segs_all]
         arr = allowed_bc.value
         surv = []
         for s in segs_all:
             i = int(np.searchsorted(arr, s["doc_lo"]))
             if i < arr.size and arr[i] <= s["doc_hi"]:
                 surv.append(s["seg"])
-        if len(surv) == len(segs_all):
+        return surv
+
+    def _postings_of(self, segs: list) -> DataFrame:
+        """The postings relation over segments ``segs`` (the exchange
+        path's scan): the handle's own one for every live segment, else a
+        pruned relation, cached per surviving segment set."""
+        if len(segs) == len(self.manifest["segments"]):
             return self._postings_df
-        key = tuple(surv)
+        key = tuple(segs)
         if key not in self._postings_pruned:
             while len(self._postings_pruned) >= self._postings_pruned_max:
                 self._postings_pruned.pop(next(iter(self._postings_pruned)))
-            self._postings_pruned[key] = (
-                read_postings(self.spark, self.root, segs=surv)
-                if surv else None)
+            self._postings_pruned[key] = read_postings(
+                self.spark, self.root, segs=segs)
         return self._postings_pruned[key]
 
     def _resolve_filter(self, doc_filter: Optional[str]):
@@ -1760,6 +1816,19 @@ def _score_local(rows: pd.DataFrame, scorer) -> tuple:
     first, as the distributed path's sortWithinPartitions does."""
     out = next(scorer(iter([rows.sort_values("chunk", kind="stable")])))
     return out["doc_id"].to_numpy(), out["score"].to_numpy()
+
+
+def _levenshtein(a: str, b: str) -> int:
+    """Edit distance in characters (insert, delete, substitute), the
+    measure of Spark's levenshtein()."""
+    prev = list(range(len(b) + 1))
+    for i, ca in enumerate(a, 1):
+        cur = [i]
+        for j, cb in enumerate(b, 1):
+            cur.append(min(prev[j] + 1, cur[j - 1] + 1,
+                           prev[j - 1] + (ca != cb)))
+        prev = cur
+    return prev[-1]
 
 
 def _merge_topk(heap_docs, heap_scores, docs, scores, k):

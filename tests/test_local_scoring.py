@@ -1,9 +1,9 @@
 """Small-scan scoring on the driver.
 
 A query whose scanned postings (Σ df over every scanned term) fit one
-scoring task's quota is scored at call time on the driver: one Arrow
-collect of the pruned blocks, the query's own chunk scorer, a local
-relation back. Contract under test: that path returns the SAME rows with
+scoring task's quota is scored at call time on the driver: an Arrow
+read of the pruned blocks' parquet files, the query's own chunk scorer,
+a local relation back. Contract under test: that path returns the SAME rows with
 bit-equal scores as the distributed path (chunk exchange -> mapInPandas
 scorer), which the ``exchange_path`` fixture forces with FORCED scoring
 tasks, and the executed plans show which path ran.

@@ -150,6 +150,28 @@ def test_expand_fuzzy_cap_keeps_closest(engine, oracle):
     assert got == exp[:3]
 
 
+@pytest.fixture
+def dict_scan(engine, monkeypatch):
+    """The engine expanding over the Spark dictionary scan, as a handle
+    whose vocabulary is above DICT_PRELOAD_LIMIT does."""
+    from parser_indexer_spark import search
+    monkeypatch.setattr(search, "DICT_PRELOAD_LIMIT", 0)
+    monkeypatch.setattr(engine, "_dict_preloaded", False)
+    return engine
+
+
+def test_expand_fuzzy_matches_brute_force_dict_scan(dict_scan, oracle):
+    test_expand_fuzzy_matches_brute_force(dict_scan, oracle)
+
+
+def test_expand_fuzzy_short_word_full_scan_dict_scan(dict_scan, oracle):
+    test_expand_fuzzy_short_word_full_scan(dict_scan, oracle)
+
+
+def test_expand_fuzzy_cap_keeps_closest_dict_scan(dict_scan, oracle):
+    test_expand_fuzzy_cap_keeps_closest(dict_scan, oracle)
+
+
 # ----------------------------------------------------------- phrase + NOT --
 
 def test_phrase_must_not_masks_without_rescoring(engine, corpus):

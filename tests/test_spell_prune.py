@@ -1,6 +1,8 @@
 """Round-4 scale paths: spellcheck bigram prefilter (VERDICT r3 #6),
 segment pruning under doc filters (#9), langid profile separation (#8)."""
 
+import os
+
 import numpy as np
 import pytest
 import pyspark.sql.functions as F
@@ -56,22 +58,39 @@ def test_spellcheck_engine_vs_scan(engine):
 
 # ------------------------------------------------------- segment pruning ---
 
-def test_segment_pruning_under_filter(spark, engine, oracle, corpus):
+def test_segment_pruning_under_filter(spark, engine, oracle, corpus,
+                                     monkeypatch, request):
     """A doc filter whose allowed range misses segment 1 entirely must
-    read strictly fewer posting files — with identical results."""
+    read strictly fewer posting files — with identical results, on the
+    driver path (Arrow read) and on the exchange path (Spark scan)."""
+    from parser_indexer_spark.manifest import CATALOG
     segs = engine.manifest["segments"]
     assert len(segs) == 2
     lo0, hi0 = segs[0]["doc_lo"], segs[0]["doc_hi"]
     flt = f"doc_id <= {hi0}"
-    got = [(r.doc_id, r.score) for r in
-           engine.search("spark join", k=10, doc_filter=flt).collect()]
+    read = []
+    arrow = CATALOG.read_arrow
+    monkeypatch.setattr(CATALOG, "read_arrow", lambda paths, *a, **kw: (
+        read.append(list(paths)), arrow(paths, *a, **kw))[1])
+
+    def run():
+        return [(r.doc_id, r.score) for r in
+                engine.search("spark join", k=10, doc_filter=flt).collect()]
+
+    got = run()
     allowed = {d for d in range(lo0, hi0 + 1)}
     exp = [(d, s) for d, s in oracle.search("spark join", k=10 ** 9)
            if d in allowed][:10]
     assert [g[0] for g in got] == [e[0] for e in exp]
     for g, e in zip(got, exp):
         assert g[1] == pytest.approx(e[1], rel=1e-6)
-    # the pruned relation was built and reads fewer files
+    # the driver path read segment 0's posting files only
+    seg0 = f"{os.sep}seg={segs[0]['seg']}{os.sep}"
+    assert len(read) == 1 and read[0]
+    assert all(seg0 in f for f in read[0])
+    # the exchange path built the pruned relation, which reads fewer files
+    request.getfixturevalue("exchange_path")
+    assert run() == got
     pruned = [v for v in engine._postings_pruned.values() if v is not None]
     assert pruned, "segment pruning did not engage"
     assert len(pruned[0].inputFiles()) < len(engine._postings_df.inputFiles())

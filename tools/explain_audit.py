@@ -190,11 +190,13 @@ def main() -> None:
 
     # 14. small scan scored on the driver: the same query as section 2
     # as planned reads far fewer postings than one scoring task's quota,
-    # so it ran at call time and returned a local relation
+    # so its blocks were read with Arrow and scored at call time, and it
+    # returned a local relation
     driver = cap_explain(ix.search("spark join", k=10, mode="AND"))
     sections.append(("Small-scan top-k on the driver: expect ONE "
-                     "LocalTableScan — no Exchange, no MapInPandas (the "
-                     "pruned scan was collected and scored in the driver)",
+                     "LocalTableScan — no Exchange, no MapInPandas, no "
+                     "Scan parquet (the pruned blocks were read with Arrow "
+                     "and scored in the driver)",
                      driver))
 
     out = ["# PLANS — physical-plan audit (generated by tools/explain_audit.py)",
@@ -226,6 +228,7 @@ def main() -> None:
     assert "MapInPandas" in facets and "LeftSemi" in facets
     assert "LocalTableScan" in driver
     assert "MapInPandas" not in driver and "Exchange" not in driver
+    assert "Scan parquet" not in driver
     print("plan assertions OK")
 
 
