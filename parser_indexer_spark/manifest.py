@@ -42,6 +42,10 @@ import pyarrow.dataset as ds
 
 from parser_indexer_spark.config import EngineConfig
 
+# the parquet format of in-process (Arrow) reads, see read_arrow
+_PARQUET = ds.ParquetFileFormat(read_options=ds.ParquetReadOptions(
+    coerce_int96_timestamp_unit="us"))
+
 
 @dataclass
 class IndexPaths:
@@ -158,8 +162,10 @@ class ParquetManifestCatalog:
         """Read the data files ``paths`` in this process, with no Spark
         job: an Arrow table of ``columns``, holding the rows where the
         pyarrow expression ``filter`` holds (row groups whose statistics
-        exclude it are skipped)."""
-        return ds.dataset(list(paths), format="parquet").to_table(
+        exclude it are skipped). Spark's INT96 timestamps come back in
+        microseconds, Spark's own unit, which spans its years 0001-9999
+        (Arrow's default, nanoseconds, silently wraps outside 1677-2262)."""
+        return ds.dataset(list(paths), format=_PARQUET).to_table(
             columns=list(columns), filter=filter)
 
     # ------------------------------------------- snapshots / manifests ---

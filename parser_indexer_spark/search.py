@@ -54,13 +54,19 @@ import os
 import re
 import unicodedata
 import zlib
+from datetime import datetime, timedelta, timezone
 from typing import Iterator, NamedTuple, Optional
+from zoneinfo import ZoneInfo
 
 import numpy as np
 import pandas as pd
+import pyarrow as pa
 import pyarrow.dataset as ds
 import pyspark.sql.functions as F
 from pyspark.sql import DataFrame, SparkSession
+from pyspark.sql.types import (BooleanType, DoubleType, IntegralType,
+                               LongType, StringType, StructField, StructType,
+                               TimestampType)
 
 from parser_indexer_spark.analyze import tokenize_py
 from parser_indexer_spark.build import read_dict, read_docs, read_postings, term_bucket
@@ -108,6 +114,60 @@ _TERM_COLS = ("term", "chunk", "first_doc_id", "last_doc_id", "num_docs",
 _PHRASE_COLS = ("term", "chunk", "first_doc_id", "num_docs", "max_tf",
                 "min_dl", "docs_enc", "tfs_enc", "dls_enc", "pos_enc")
 
+# a scored match set: the columns of every top-k answer, and of the frame
+# a full match scored on the driver hands the full-match tails
+_HITS = StructType([StructField("doc_id", LongType()),
+                    StructField("score", DoubleType())])
+
+# the answers of the full-match tails, as the Spark tails type them
+_FACETS = StructType([StructField("field", StringType()),
+                      StructField("value", StringType()),
+                      StructField("n", LongType(), False)])
+_RANGE = StructType([StructField("bucket_lo", LongType()),
+                     StructField("n", LongType(), False)])
+_PIVOT = StructType([StructField("value_a", StringType()),
+                     StructField("value_b", StringType()),
+                     StructField("n", LongType(), False)])
+
+# doc-store column types whose grouping, ordering, nulls and string form
+# the pandas tails reproduce exactly; a column of another type (or the
+# `seg` partition column, which the files do not store) takes the Spark
+# tail over the driver's match set
+_TAIL_TYPES = (StringType, IntegralType, BooleanType, TimestampType)
+
+# Arrow -> pandas types that keep nulls apart from values (the defaults
+# turn a nullable integer column into float64)
+_NULLABLE = {pa.int8(): pd.Int8Dtype(), pa.int16(): pd.Int16Dtype(),
+             pa.int32(): pd.Int32Dtype(), pa.int64(): pd.Int64Dtype(),
+             pa.bool_(): pd.BooleanDtype()}
+
+_EPOCH = datetime(1970, 1, 1, tzinfo=timezone.utc)
+_MICROSECOND = timedelta(microseconds=1)
+# the UTC instants (µs since the epoch) whose wall time in every zone is a
+# Python datetime; a zone's offset is the same beyond them (its local mean
+# time before, its December rule after), so it is looked up at the end
+_NAMED = tuple((datetime(*d, tzinfo=timezone.utc) - _EPOCH) // _MICROSECOND
+               for d in ((1, 1, 2), (9999, 12, 30)))
+
+
+def _wall_times(utc: np.ndarray, zone) -> np.ndarray:
+    """The UTC instants ``utc`` (µs since the epoch) as wall times in the
+    tzinfo ``zone`` (µs since the epoch), the offset of each distinct
+    instant looked up once."""
+    fixed = zone.utcoffset(None)
+    if fixed is not None:
+        return utc + fixed // _MICROSECOND
+    instants, at = np.unique(np.clip(utc, *_NAMED), return_inverse=True)
+    offsets = [(_EPOCH + int(u) * _MICROSECOND).astimezone(zone)
+               .utcoffset() // _MICROSECOND for u in instants]
+    return utc + np.asarray(offsets, np.int64)[at]
+
+
+# a value of each Spark type for the placeholder row of an empty local
+# relation (see Index._local); numeric types take 0
+_PLACEHOLDER = {"string": "", "boolean": False,
+                "timestamp": pd.Timestamp(0, tz="UTC")}
+
 
 class Plan(NamedTuple):
     """How one query runs, decided by Index._plan before anything
@@ -145,9 +205,12 @@ class Index:
     the dictionary, postings and docs relations (their file listings
     included) are read once, here, and the driver path reads the posting
     files of the manifest's segments only, listing each (segment, bucket)
-    directory once. Tombstones written through this handle apply at once;
-    after an incremental update, an upsert or a compaction of the
-    directory, open a new Index to see it."""
+    directory once. The driver's full-match tails read the doc-store
+    files of every docs partition (after a compaction these are not the
+    live segments), listed once, at the first such tail. Tombstones
+    written through this handle apply at once; after an incremental
+    update, an upsert or a compaction of the directory, open a new Index
+    to see it."""
 
     def __init__(self, spark: SparkSession, root: str):
         self.spark = spark
@@ -189,6 +252,8 @@ class Index:
         self._postings_pruned_max = 8
         # (seg, bucket) -> its posting files, for the driver path's reads
         self._part_files: dict[tuple, list] = {}
+        # the doc-store files, for the driver's full-match tails
+        self._docs_files: Optional[list] = None
         # tombstones [public: Lucene liveDocs]: sorted doc_id array of
         # deleted docs, loaded driver-side from the manifest's deletes
         # generation (bounded by FILTER_BROADCAST_LIMIT — delete_docs
@@ -427,7 +492,7 @@ class Index:
 
         def topk(d, sc, kk):
             order = np.lexsort((d, -sc))[:kk]
-            return self._local(d[order], sc[order])
+            return self._answer(d[order], sc[order], True)
 
         if tot_b == 0.0:
             # every term complete: the union carries every matching doc
@@ -762,7 +827,7 @@ class Index:
                     boosts: Optional[dict] = None, *, k: int = 10,
                     doc_filter: Optional[str] = None,
                     after: Optional[tuple] = None,
-                    sort: bool = True) -> DataFrame:
+                    sort: bool = True):
         """The one term-query entry behind search(), search_fields(),
         query(), the single-term phrase and the full-match methods. Takes
         ANALYZED terms: ``required`` (MUST) words join the scored set,
@@ -771,23 +836,24 @@ class Index:
         doc count and avgdl, its idf weighted by ``boosts[field]``; None
         means the text field with index-wide stats, the only case the
         impact sidecar covers. ``sort=False`` returns the full match set
-        (unsorted, unpruned, untruncated; ``k`` is ignored). The query
-        runs as Index._plan says."""
+        (unsorted, unpruned, untruncated; ``k`` is ignored), a pandas
+        frame when scored on the driver (see _answer). The query runs as
+        Index._plan says."""
         terms = sorted(set(terms) | set(required))
         if not terms:
-            return self._empty()
+            return self._empty(sort)
         dfs = self.term_stats(terms)
         # required-term semantics [public: Lucene BooleanQuery MUST]: an AND
         # query containing a term absent from the index matches nothing —
         # checked against the ORIGINAL term list, before dropping df==0
         # terms; a MUST word absent from the index matches nothing too
         if mode == "AND" and any(dfs[t] == 0 for t in terms):
-            return self._empty()
+            return self._empty(sort)
         if any(dfs[t] == 0 for t in required):
-            return self._empty()
+            return self._empty(sort)
         terms = [t for t in terms if dfs[t] > 0]
         if not terms:
-            return self._empty()
+            return self._empty(sort)
         req = sorted(set(required))
         if mode == "AND" or (req and set(req) == set(terms)):
             # every term required: the dedicated AND path IS this query
@@ -832,28 +898,126 @@ class Index:
             return None
         return fs.get("n_docs", self.stats["n_docs"]), fs["avg_dl"]
 
-    def _empty(self) -> DataFrame:
-        """The empty answer, as a local relation (see _local)."""
-        return self._local(np.empty(0, np.int64), np.empty(0, np.float64))
+    def _empty(self, sort: bool = True):
+        """The empty answer (see _answer)."""
+        return self._answer(np.empty(0, np.int64), np.empty(0), sort)
+
+    def _answer(self, docs: np.ndarray, scores: np.ndarray, sort: bool):
+        """A driver-side answer: a local relation of _HITS (see _local),
+        or for a full match (``sort=False``) the pandas frame itself, which
+        the full-match tails aggregate without a Spark job."""
+        hits = pd.DataFrame({"doc_id": docs.astype(np.int64),
+                             "score": scores.astype(np.float64)})
+        return self._local(hits, _HITS) if sort else hits
 
     def _matches(self, query: str, mode: str, doc_filter: Optional[str],
-                 must: Optional[list], must_not: Optional[list]) -> DataFrame:
+                 must: Optional[list], must_not: Optional[list]):
         """The query's FULL match set: every matching doc with its exact
         BM25 score, unsorted — a full-match plan has no pruning, θ seeding,
         heap truncation, impact fast path or global top-k. Tombstones are
         masked inside the scorer like every other query path. A scan
         within one scoring task's share of the distributed fan-out is
-        scored at call time into a local relation (see Index._plan)."""
+        scored at call time on the driver and comes back as a pandas frame
+        (doc_id, score), which the tails read doc-store columns onto with
+        Arrow (_docs_columns) and aggregate in pandas; a larger one is the
+        exchange's lazy relation, which the tails join in Spark (see
+        Index._plan). The tails tell the two apart by type."""
         return self._term_query(
             *self._parse_search(query, mode, must, must_not), mode,
             doc_filter=doc_filter, sort=False)
 
-    def _matched_docs(self, query: str, mode: str,
-                      doc_filter: Optional[str], must: Optional[list],
-                      must_not: Optional[list]) -> DataFrame:
-        """Doc-store rows of the full match set (left-semi join)."""
-        m = self._matches(query, mode, doc_filter, must, must_not)
-        return self._docs_df.join(m.select("doc_id"), "doc_id", "left_semi")
+    def _relation(self, m) -> DataFrame:
+        """A match set as a Spark relation: a driver frame becomes a local
+        relation, the exchange's relation stays as it is."""
+        return self._local(m, _HITS) if isinstance(m, pd.DataFrame) else m
+
+    def _matched_docs(self, m) -> DataFrame:
+        """The Spark tails' doc-store rows of the match set ``m`` (a
+        left-semi join of the docs relation)."""
+        return self._docs_df.join(self._relation(m).select("doc_id"),
+                                  "doc_id", "left_semi")
+
+    def _docs_columns(self, m, cols, types=_TAIL_TYPES):
+        """The driver tails' docs read: the match frame ``m`` with the
+        doc-store columns ``cols`` merged on (an inner merge on doc_id, as
+        the Spark tails join), read through CATALOG with Arrow in this
+        process — ``doc_id`` and ``cols`` only, the matched docs' rows
+        only, from the files of every docs partition, listed once per
+        handle (compaction leaves doc rows in their old partitions, so
+        these are not the live segments). Integers and booleans keep
+        their nulls; timestamps are UTC instants in microseconds (the
+        read keeps Spark's INT96 years 0001-9999). Returns None when the
+        tail runs in Spark: ``m`` is the exchange's relation, or a column
+        is not a stored doc-store column of one of ``types``."""
+        schema = self._docs_df.schema
+        if not isinstance(m, pd.DataFrame) or not all(
+                c in schema.names and c != "seg"
+                and isinstance(schema[c].dataType, types) for c in cols):
+            return None
+        if self._docs_files is None:
+            self._docs_files = [
+                f for part in CATALOG.list_files(IndexPaths(self.root).docs)
+                if os.path.basename(part).startswith("seg=")
+                for f in CATALOG.list_files(part)]
+        cols = [c for c in dict.fromkeys(cols) if c != "doc_id"]
+        docs = CATALOG.read_arrow(
+            self._docs_files, ["doc_id", *cols],
+            ds.field("doc_id").isin(m["doc_id"].to_numpy())
+        ).to_pandas(types_mapper=_NULLABLE.get)
+        for c in cols:
+            if isinstance(schema[c].dataType, TimestampType) \
+                    and docs[c].dt.tz is None:
+                docs[c] = docs[c].dt.tz_localize("UTC")
+        return m.merge(docs.astype({"doc_id": np.int64}), on="doc_id")
+
+    def _strings(self, values: pd.Series, field: str) -> np.ndarray:
+        """``values`` of doc-store column ``field`` as Spark's
+        ``cast(field as string)`` prints them (a _TAIL_TYPES column, no
+        nulls): timestamps in the session time zone, with the fraction of
+        a second trimmed of trailing zeros and left out when zero, for
+        every year Spark stores (0001-9999)."""
+        dtype = self._docs_df.schema[field].dataType
+        if isinstance(dtype, BooleanType):
+            return np.where(values.to_numpy(bool), "true", "false")
+        if isinstance(dtype, TimestampType):
+            utc = values.dt.tz_convert(None).to_numpy("datetime64[us]")
+            text = pd.Series(np.datetime_as_string(_wall_times(
+                utc.astype(np.int64), self._session_zone())
+                .astype("datetime64[us]"), unit="us"))
+            # '[Y]YYYY-MM-DDTHH:MM:SS.ffffff': Spark marks a five-digit
+            # year with '+' and prints the day in four digits at least
+            day = text.str[:-16]
+            day = day.where(day.str.len() == 10, "+" + day)
+            frac = text.str[-7:].str.rstrip("0").str.rstrip(".")
+            return (day + " " + text.str[-15:-7] + frac).to_numpy()
+        return values.astype(str).to_numpy()
+
+    def _session_zone(self):
+        """The session time zone Spark prints timestamps in, as a Python
+        tzinfo: Spark parses the id (a region, or an offset such as
+        '+05:30' or 'GMT+8'), a fixed offset stays one, and a region is
+        the IANA zone of that name."""
+        name = self.spark.conf.get("spark.sql.session.timeZone")
+        if name == "UTC":
+            return timezone.utc
+        jvm = self.spark._jvm
+        zone = jvm.org.apache.spark.sql.catalyst.util.DateTimeUtils \
+            .getZoneId(name).normalized()
+        rules = zone.getRules()
+        if rules.isFixedOffset():
+            return timezone(timedelta(seconds=rules.getOffset(
+                jvm.java.time.Instant.EPOCH).getTotalSeconds()))
+        return ZoneInfo(zone.getId())
+
+    def _hits_with(self, frame: pd.DataFrame, field: str) -> DataFrame:
+        """Rows (doc_id, score, ``field``) of a driver tail's ``frame`` as
+        a local relation typed as the Spark tails' join gives them (which
+        keeps one doc_id when ``field`` is doc_id)."""
+        if field == "doc_id":
+            return self._local(frame[["doc_id", "score"]], _HITS)
+        return self._local(
+            frame[["doc_id", "score", field]],
+            StructType(_HITS.fields + [self._docs_df.schema[field]]))
 
     def search_facets(self, query: str, facet_fields: list,
                       mode: str = "OR", doc_filter: Optional[str] = None,
@@ -865,24 +1029,33 @@ class Index:
 
         Matching rides the ordinary scorer with pruning, θ seeding, heap
         truncation, and the global top-k sort all disabled (facets need
-        every match; the ``_matches`` path): the plan is the same pruned
-        block scan -> streaming scorer -> left-semi join into the doc
-        store -> stack(field, value) -> groupBy/count. No top-k heap, and
-        distributed end-to-end once the scan outgrows one scoring task's
-        share (a smaller match set is scored on the driver, see _matches)
-        — the shape that survives faceting a head term at corpus scale.
+        every match; the ``_matches`` path). A match set scored on the
+        driver has its facet columns read with Arrow (_docs_columns) and
+        counted in pandas into a local relation — no Spark job. A larger
+        one stays distributed end-to-end: streaming scorer -> left-semi
+        join into the doc store -> stack(field, value) -> groupBy/count,
+        the shape that survives faceting a head term at corpus scale.
         Tombstones are masked inside the scorer like every other query
         path.
 
         Returns (field string, value string, n long), one row per facet
         field value with >= 1 matching doc (null values dropped, like
-        Solr's default facet.missing=false)."""
+        Solr's default facet.missing=false); a value is Spark's
+        ``cast(field as string)`` on both paths."""
         if not facet_fields:
             raise ValueError("facet_fields must be non-empty")
+        m = self._matches(query, mode, doc_filter, must, must_not)
+        docs = self._docs_columns(m, facet_fields)
+        if docs is not None:
+            stacked = pd.concat([pd.DataFrame(
+                {"field": f, "value": self._strings(docs[f].dropna(), f)})
+                for f in facet_fields])
+            return self._local(stacked.groupby(["field", "value"], sort=False)
+                               .size().reset_index(name="n"), _FACETS)
         stack_expr = "stack({}, {}) as (field, value)".format(
             len(facet_fields),
             ", ".join(f"'{f}', cast({f} as string)" for f in facet_fields))
-        return (self._matched_docs(query, mode, doc_filter, must, must_not)
+        return (self._matched_docs(m)
                 .selectExpr(stack_expr)
                 .where(F.col("value").isNotNull())
                 .groupBy("field", "value").agg(F.count("*").alias("n")))
@@ -896,26 +1069,40 @@ class Index:
         """Range faceting over the query's full match set [public: Solr
         facet.range]: doc counts per ``[start + i*gap, start + (i+1)*gap)``
         bucket of a numeric doc-store ``field``, computed over EVERY
-        matching doc. Values outside ``[start, end)`` and nulls are
-        dropped (Solr's default ``facet.range.other=none``); the last
-        bucket keeps its full ``gap`` width (Solr raises ``end`` to
+        matching doc. A value v falls in the bucket whose floor is
+        ``start + floor((v - start) / gap) * gap``. Values outside
+        ``[start, end)`` and nulls are dropped (Solr's default
+        ``facet.range.other=none``); the last bucket keeps its full
+        ``gap`` width (Solr raises ``end`` to
         ``start + ceil((end-start)/gap)*gap`` — same here, since the
         bucket floor, not ``end``, bounds membership).
 
-        Same distributed shape as search_facets: unpruned/unsorted scorer
-        (``_matches``) -> left-semi join into the doc store -> one
-        groupBy over the bucket floor. Returns (bucket_lo long, n long),
-        only buckets with >= 1 matching doc (Solr mincount=1 behaviour;
-        a UI zero-fills client-side from start/end/gap). Integer
-        start/end/gap only — bucket_lo is a long."""
+        Same shapes as search_facets: a driver-scored match set of an
+        integer field is bucketed and counted in pandas; otherwise the
+        unpruned/unsorted scorer (``_matches``) -> left-semi join into
+        the doc store -> one groupBy over the bucket floor. Returns
+        (bucket_lo long, n long), only buckets with >= 1 matching doc
+        (Solr mincount=1 behaviour; a UI zero-fills client-side from
+        start/end/gap). Integer start/end/gap only — bucket_lo is a
+        long."""
         if gap <= 0 or end <= start:
             raise ValueError("need gap > 0 and end > start")
         if not all(isinstance(x, int) for x in (start, end, gap)):
             raise ValueError("integer start/end/gap only")
+        m = self._matches(query, mode, doc_filter, must, must_not)
+        docs = self._docs_columns(m, [field], IntegralType)
+        if docs is not None:
+            v = docs[field].dropna().to_numpy(np.int64)
+            v = v[(v >= start) & (v < end)]
+            n = pd.Series(start + np.floor((v - start) / gap)
+                          .astype(np.int64) * gap).value_counts()
+            return self._local(
+                pd.DataFrame({"bucket_lo": n.index.to_numpy(np.int64),
+                              "n": n.to_numpy(np.int64)}), _RANGE)
         v = F.col(field)
         bucket_lo = (F.lit(start)
                      + F.floor((v - start) / gap) * gap).cast("long")
-        return (self._matched_docs(query, mode, doc_filter, must, must_not)
+        return (self._matched_docs(m)
                 .where(v.isNotNull() & (v >= start) & (v < end))
                 .select(bucket_lo.alias("bucket_lo"))
                 .groupBy("bucket_lo").agg(F.count("*").alias("n")))
@@ -931,17 +1118,27 @@ class Index:
         doc_id — the engine's standard total order), THEN the top-k page
         is taken over the group representatives. Correct collapsing needs
         the FULL match set (a pre-collapsed top-k could starve groups), so
-        this rides the unpruned ``_matches`` scorer like facets, then
-        one window rank per group and the ordinary global top-k — two
-        shuffles total (group hash, final TakeOrdered).
+        this rides the unpruned ``_matches`` scorer like facets. A match
+        set scored on the driver reads the field with Arrow and collapses
+        in pandas (one sort, first row per value); a larger one joins the
+        field in Spark, then one window rank per group and the ordinary
+        global top-k — two shuffles total (group hash, final
+        TakeOrdered).
 
         A null group value forms ONE group like any other value (Spark
         window and SQL GROUP BY semantics; deviation from Solr's default
         nullPolicy=ignore, declared here). Returns (doc_id long, score
         double, <collapse_field>), ordered (score desc, doc_id asc),
         <= k rows."""
+        m = self._matches(query, mode, doc_filter, must, must_not)
+        docs = self._docs_columns(m, [collapse_field])
+        if docs is not None:
+            best = (docs.sort_values(["score", "doc_id"],
+                                     ascending=[False, True], kind="stable")
+                    .drop_duplicates(collapse_field).head(k))
+            return self._hits_with(best, collapse_field)
         from pyspark.sql import Window
-        joined = self._matches(query, mode, doc_filter, must, must_not).join(
+        joined = self._relation(m).join(
             self._docs_df.select("doc_id", collapse_field), "doc_id", "inner")
         w = (Window.partitionBy(collapse_field)
              .orderBy(F.desc("score"), F.asc("doc_id")))
@@ -958,12 +1155,24 @@ class Index:
         [public: Solr facet.pivot=`a,b`]: doc counts per (field_a,
         field_b) value pair across EVERY matching doc — the drill-down
         tree a search UI renders, flattened to rows. Same full-match
-        shape as facets: _matches scorer -> left-semi join -> ONE
-        two-key groupBy (the nested tree is a client-side regroup of
-        these rows — no extra pass needed). Rows where either field is
-        null are dropped (facet.missing=false at both levels). Returns
-        (value_a string, value_b string, n long)."""
-        return (self._matched_docs(query, mode, doc_filter, must, must_not)
+        shapes as facets: a driver-scored match set is counted in pandas
+        (one two-key groupby); otherwise _matches scorer -> left-semi join
+        -> ONE two-key groupBy (the nested tree is a client-side regroup
+        of these rows — no extra pass needed). Rows where either field is
+        null are dropped (facet.missing=false at both levels); values are
+        Spark's ``cast(field as string)``. Returns (value_a string,
+        value_b string, n long)."""
+        m = self._matches(query, mode, doc_filter, must, must_not)
+        docs = self._docs_columns(m, [field_a, field_b])
+        if docs is not None:
+            pairs = docs[[field_a, field_b]].dropna()
+            pairs = pd.DataFrame(
+                {"value_a": self._strings(pairs.iloc[:, 0], field_a),
+                 "value_b": self._strings(pairs.iloc[:, 1], field_b)})
+            return self._local(pairs.groupby(["value_a", "value_b"],
+                                             sort=False)
+                               .size().reset_index(name="n"), _PIVOT)
+        return (self._matched_docs(m)
                 .where(F.col(field_a).isNotNull()
                        & F.col(field_b).isNotNull())
                 .select(F.col(field_a).cast("string").alias("value_a"),
@@ -980,14 +1189,22 @@ class Index:
         /select; Lucene Sort/SortField]: the top-k of the FULL match set
         ordered by a doc-store field instead of relevance. A score-pruned
         scorer is unsound here (the best-by-field doc may score lowest),
-        so the match set comes from the unpruned ``_matches`` scorer,
-        joins the sort field, and one TakeOrdered picks the page —
-        exactly the shape Solr uses (bypass relevance, walk the field).
-        Nulls sort LAST in both directions (Solr sortMissingLast
-        analogue, declared); ties break by doc_id ascending (the
-        engine's standard total order). Returns (doc_id long, score
-        double, <by>), <= k rows."""
-        joined = self._matches(query, mode, doc_filter, must, must_not).join(
+        so the match set comes from the unpruned ``_matches`` scorer and
+        is ordered by the field — exactly the shape Solr uses (bypass
+        relevance, walk the field): a driver-scored match set reads the
+        field with Arrow and sorts in pandas, a larger one joins it in
+        Spark and one TakeOrdered picks the page. Nulls sort LAST in both
+        directions (Solr sortMissingLast analogue, declared); ties break
+        by doc_id ascending (the engine's standard total order). Returns
+        (doc_id long, score double, <by>), <= k rows."""
+        m = self._matches(query, mode, doc_filter, must, must_not)
+        docs = self._docs_columns(m, [by])
+        if docs is not None:
+            page = docs.sort_values([by, "doc_id"],
+                                    ascending=[ascending, True],
+                                    na_position="last", kind="stable")
+            return self._hits_with(page.head(k), by)
+        joined = self._relation(m).join(
             self._docs_df.select("doc_id", by), "doc_id", "inner")
         key = (F.col(by).asc_nulls_last() if ascending
                else F.col(by).desc_nulls_last())
@@ -1001,13 +1218,32 @@ class Index:
         """Numeric stats over the query's full match set [public: Solr
         StatsComponent (`stats.field`); JSON facet aggregations]:
         count/sum/mean/min/max of a doc-store numeric field across EVERY
-        matching doc. Same full-match shape as facets (``_matches``
-        scorer -> left-semi join -> ONE partial+final aggregate); nulls
-        excluded from all five stats (Solr counts them separately as
-        `missing` — not returned here). Returns one row
-        (n long, sum_v, avg_v double, min_v, max_v)."""
+        matching doc. Same full-match shapes as facets: a driver-scored
+        match set of an integer field is summarised in pandas; otherwise
+        ``_matches`` scorer -> left-semi join -> ONE partial+final
+        aggregate. Nulls are excluded from all five stats (Solr counts
+        them separately as `missing` — not returned here), and a match set
+        with no value still gives its one row, (0, null, null, null,
+        null). Returns one row (n long, sum_v, avg_v double, min_v,
+        max_v)."""
+        m = self._matches(query, mode, doc_filter, must, must_not)
+        docs = self._docs_columns(m, [field], IntegralType)
+        if docs is not None:
+            v = docs[field].dropna().to_numpy(np.int64)
+            total = int(v.sum())
+            row = [v.size, total, total / v.size, int(v.min()),
+                   int(v.max())] if v.size else [0, None, None, None, None]
+            dtype = self._docs_df.schema[field].dataType
+            return self._local(
+                pd.DataFrame([row], columns=["n", "sum_v", "avg_v", "min_v",
+                                             "max_v"]),
+                StructType([StructField("n", LongType(), False),
+                            StructField("sum_v", LongType()),
+                            StructField("avg_v", DoubleType()),
+                            StructField("min_v", dtype),
+                            StructField("max_v", dtype)]))
         v = F.col(field)
-        return (self._matched_docs(query, mode, doc_filter, must, must_not)
+        return (self._matched_docs(m)
                 .agg(F.count(v).alias("n"),
                      F.sum(v).alias("sum_v"),
                      F.avg(v).alias("avg_v"),
@@ -1028,11 +1264,13 @@ class Index:
         the result is the complete match set; no heap, and a scan larger
         than one scoring task's share stays a distributed DataFrame the
         caller writes or joins (a smaller one is scored on the driver into
-        a local relation, see _matches). Deliberately UNORDERED (a global
-        sort of an unbounded match set is the one thing /export refuses too — Solr streams by
-        segment order; callers sort after narrowing). Returns
+        a local relation, see _matches); ``columns`` are joined in Spark
+        on both paths. Deliberately UNORDERED (a global sort of an
+        unbounded match set is the one thing /export refuses too — Solr
+        streams by segment order; callers sort after narrowing). Returns
         (doc_id long, score double, *columns)."""
-        out = self._matches(query, mode, doc_filter, must, must_not)
+        out = self._relation(
+            self._matches(query, mode, doc_filter, must, must_not))
         if columns:
             out = out.join(self._docs_df.select("doc_id", *columns),
                            "doc_id", "inner")
@@ -1050,16 +1288,17 @@ class Index:
         per matching doc — recency decay, length priors, popularity
         signals. An unbounded boost can promote ANY match into the page,
         so score-pruned top-k is unsound here: the match set rides the
-        unpruned ``_matches`` scorer, joins the doc store once, and one
-        TakeOrdered picks the page (same full-match shape as
-        search_sort_by). A null boost value is the neutral element
-        (1 multiplicative / 0 additive — deterministic; Solr's
-        `field(f,def)` default analogue, declared). Ties break by doc_id
-        ascending. Returns (doc_id long, score double), <= k rows —
+        unpruned ``_matches`` scorer, joins the doc store once in Spark
+        (``boost_by`` is SQL, so this tail stays in Spark on both paths),
+        and one TakeOrdered picks the page. A null boost value is the
+        neutral element (1 multiplicative / 0 additive — deterministic;
+        Solr's `field(f,def)` default analogue, declared). Ties break by
+        doc_id ascending. Returns (doc_id long, score double), <= k rows —
         ``score`` is the BOOSTED score."""
         b = F.coalesce(F.expr(boost_by).cast("double"),
                        F.lit(0.0 if additive else 1.0))
-        joined = self._matches(query, mode, doc_filter, must, must_not).join(
+        joined = self._relation(
+            self._matches(query, mode, doc_filter, must, must_not)).join(
             self._docs_df, "doc_id", "inner")
         boosted = (F.col("score") + b) if additive else (F.col("score") * b)
         return (joined.select("doc_id", boosted.alias("score"))
@@ -1313,8 +1552,13 @@ class Index:
           exchange splits over its tasks, so its quota is one task's
           share. Measured on a 200k-turn index at local[4]: the driver
           answers a top-k scan of up to 2x the quota faster and breaks
-          even near 4x, and a full-match scan faster at a quarter of the
-          quota (the share of 4 tasks) and slower at half.
+          even near 4x. The full-match quota comes from a crossover
+          measured while a Spark join of the docs relation still followed
+          the driver (faster at a quarter of the quota, slower at half);
+          with the tails aggregating in pandas, the driver answered
+          facets and sort_by faster at every size re-measured, up to 8.6x
+          this quota (table in ROADMAP item 1), so the quota is out of
+          date and waits for a crossover measured past those sizes.
         * The exchange's width grows with THIS QUERY's posting volume
           (VERDICT r1 #2) — never with total index size — capped at 2
           waves of the cluster's parallelism (r4: each mapInPandas task
@@ -1346,7 +1590,7 @@ class Index:
             tasks=tasks, semi_join=semi_join)
 
     def _score_blocks(self, terms, excl, columns, make_scorer, seed, plan,
-                      *, k, sort, doc_filter, after) -> DataFrame:
+                      *, k, sort, doc_filter, after):
         """The one execution tail of term and phrase queries, run as
         ``plan`` (Index._plan) says: pruned block scan -> streamed chunk
         scorer -> top-k, on the driver or over one chunk exchange of
@@ -1354,9 +1598,10 @@ class Index:
         scorer reads. ``make_scorer``: the kind's scorer factory, given the
         run options here. ``seed(blocks)``: the kind's θ0 under the plan.
         ``sort=False`` (full match): return EVERY match unsorted; ``k`` is
-        ignored. A driver answer is a local relation (top-k in (score
-        desc, doc_id asc) order, or every match unsorted) whose scores are
-        bit-identical to the exchange's: each chunk is scored by the same
+        ignored. A driver answer (see _answer) is a local relation of the
+        top-k in (score desc, doc_id asc) order, or a pandas frame of
+        every match, unsorted; its scores are bit-identical to the
+        exchange's: each chunk is scored by the same
         code from the same blocks, which the driver reads with Arrow
         (_read_blocks) instead of a Spark scan. The Spark relation is
         built only for the exchange and for a scan θ seed."""
@@ -1369,10 +1614,10 @@ class Index:
         # scoring everything and semi-joining after (VERDICT r1 #1).
         allowed_bc, is_empty = self._resolve_filter(doc_filter)
         if is_empty:
-            return self._empty()
+            return self._empty(sort)
         segs = self._segs_for_filter(allowed_bc)
         if not segs:
-            return self._empty()   # filter range misses every live segment
+            return self._empty(sort)   # filter range misses every segment
         blocks = None
         if plan.seed_scan or not plan.driver:
             blocks = (
@@ -1390,8 +1635,9 @@ class Index:
         if plan.driver:
             # the truncated heap comes out in (score desc, doc_id asc)
             # order already; the full-match set needs no order
-            return self._local(*_score_local(
-                self._read_blocks(segs, buckets, scanned, columns), scorer))
+            return self._answer(*_score_local(
+                self._read_blocks(segs, buckets, scanned, columns), scorer),
+                sort)
         cand = (
             blocks.repartition(plan.tasks, "chunk")
                   .sortWithinPartitions("chunk")
@@ -1420,20 +1666,22 @@ class Index:
         return CATALOG.read_arrow(
             files, columns, ds.field("term").isin(list(terms))).to_pandas()
 
-    def _local(self, docs: np.ndarray, scores: np.ndarray) -> DataFrame:
-        """A driver-side answer as a local relation (doc_id long, score
-        double) holding the rows in the order given — the small-scan path
-        and both impact-sidecar fast paths pass them already ordered, and
+    def _local(self, frame: pd.DataFrame, schema: StructType) -> DataFrame:
+        """A driver-side answer as a local relation of ``schema`` (the
+        frame's columns in its order) holding the rows in the order given
+        — the small-scan path, both impact-sidecar fast paths and the
+        full-match tails pass them already ordered, and
         collect()/toPandas()/limit() on a local relation keep that order
-        without a Spark sort. Collecting it starts no Spark job."""
-        if docs.size == 0:
+        without a Spark sort. Collecting it starts no Spark job. Built
+        from a pandas frame only: Spark makes a list of rows an RDD
+        scan."""
+        if frame.empty:
             # Spark turns an empty pandas frame into an RDD scan, one job
             # per collect; a one-row local relation cut to none stays local
-            return self._local(np.zeros(1), np.zeros(1)).limit(0)
-        return self.spark.createDataFrame(
-            pd.DataFrame({"doc_id": docs.astype(np.int64),
-                          "score": scores.astype(np.float64)}),
-            "doc_id long, score double")
+            return self._local(pd.DataFrame(
+                {f.name: [_PLACEHOLDER.get(f.dataType.typeName(), 0)]
+                 for f in schema}), schema).limit(0)
+        return self.spark.createDataFrame(frame, schema)
 
     # ----------------------------------------------------------- phrase ---
     def phrase(self, query: str, k: int = 10, slop: int = 0,

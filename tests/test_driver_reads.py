@@ -7,7 +7,9 @@ and scores them in this process. Contracts under test: such a query
 starts no Spark job from call through collect(); the rows it scores are
 the Spark scan's rows, payloads byte for byte; a handle keeps answering
 from the snapshot it opened while a writer appends; and the empty answer
-is a local relation too.
+is a local relation too. The full-match tails (facets, range/pivot/stats
+facets, collapse, sort_by) over a driver-scored match set read their
+docs columns with Arrow and aggregate in pandas: no Spark job either.
 """
 
 import itertools
@@ -80,6 +82,39 @@ def test_exchange_path_still_runs_jobs(spark, engine, exchange_path):
     rows, jobs = _jobs(spark, lambda: QUERIES["or"](engine))
     assert rows and jobs >= 1
     assert exchange_path and not exchange_path[-1].driver
+
+
+# name -> full-match tail of query ``q`` on a handle: each reads its docs
+# columns with Arrow and aggregates in pandas when the match set was
+# scored on the driver
+TAILS = {
+    "facets": lambda ix, q: ix.search_facets(q, ["role", "tool"]),
+    "facet_range": lambda ix, q: ix.search_facet_range(q, "turn_idx",
+                                                       0, 40, 5),
+    "facet_pivot": lambda ix, q: ix.search_facet_pivot(q, "role", "tool"),
+    "facet_stats": lambda ix, q: ix.search_facet_stats(q, "turn_idx"),
+    "collapse": lambda ix, q: ix.search_collapse(q, "role", k=10),
+    "sort_by": lambda ix, q: ix.search_sort_by(q, "turn_idx", k=10),
+}
+
+
+@pytest.mark.parametrize("q", ["spark join", "zzzunseen"])
+@pytest.mark.parametrize("name", sorted(TAILS))
+def test_full_match_tail_starts_no_job(spark, engine, name, q):
+    run = lambda: TAILS[name](engine, q)   # noqa: E731
+    warm, _ = _jobs(spark, run)
+    rows, jobs = _jobs(spark, run)
+    assert rows == warm and jobs == 0
+    # an absent term matches nothing; its stats are still one row
+    assert bool(rows) == (q != "zzzunseen" or name == "facet_stats")
+
+
+def test_full_match_tails_on_exchange_run_jobs(spark, engine, exchange_path):
+    for name, tail in TAILS.items():
+        rows, jobs = _jobs(spark, lambda: tail(engine, "spark join"))
+        assert rows and jobs >= 1, name
+    assert len(exchange_path) == len(TAILS)
+    assert not any(p.driver for p in exchange_path)
 
 
 @pytest.mark.parametrize("run", [
@@ -170,15 +205,26 @@ def test_handle_stays_on_its_snapshot(spark, tmp_path):
     old = Index(spark, root)
     queries = [lambda ix: ix.search("spark join", k=20),
                lambda ix: ix.phrase("spark join", k=20)]
-    before = [q(old).collect() for q in queries]
+    # driver-path full-match tails: their docs listing is the handle's
+    tails = [lambda ix: ix.search_facets("spark join", ["role", "doc_id"]),
+             lambda ix: ix.search_sort_by("spark join", "turn_idx", k=20)]
+
+    def answers(ix):
+        return [q(ix).collect() for q in queries] \
+            + [sorted(t(ix).collect()) for t in tails]
+
+    before = answers(old)
     assert all(before)
     append_segment(spark, root, spark.createDataFrame(corpus.iloc[200:]),
                    cfg)
     # the old handle reads its own snapshot's segments only
-    assert [q(old).collect() for q in queries] == before
+    assert answers(old) == before
     new = Index(spark, root)
     assert len(new.manifest["segments"]) == 2
     first_new = old.manifest["max_doc_id"] + 1
     for q in queries:
         rows = q(new).collect()
         assert any(r["doc_id"] >= first_new for r in rows)
+    facets = tails[0](new).collect()
+    assert any(int(r["value"]) >= first_new for r in facets
+               if r["field"] == "doc_id")

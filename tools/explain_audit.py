@@ -199,6 +199,17 @@ def main() -> None:
                      "and scored in the driver)",
                      driver))
 
+    # 15. full-match tail on the driver: the section 11 facets as planned
+    # — the match set is scored in the driver, its facet columns read
+    # from the doc-store files with Arrow and counted in pandas
+    driver_facets = cap_explain(ix.search_facets("spark join",
+                                                 ["role", "tool"]))
+    sections.append(("search_facets on the driver: expect ONE "
+                     "LocalTableScan — no Scan parquet, no Exchange, no "
+                     "HashAggregate, no MapInPandas (the match set was "
+                     "scored in the driver, its docs columns read with "
+                     "Arrow and counted in pandas)", driver_facets))
+
     out = ["# PLANS — physical-plan audit (generated by tools/explain_audit.py)",
            "", "Checks SURVEY.md §4's free-vs-custom claims against the real "
            "Catalyst output. Regenerate after plan-affecting changes.", ""]
@@ -229,6 +240,10 @@ def main() -> None:
     assert "LocalTableScan" in driver
     assert "MapInPandas" not in driver and "Exchange" not in driver
     assert "Scan parquet" not in driver
+    assert "HashAggregate" in facets
+    assert "LocalTableScan" in driver_facets
+    for node in ("Scan parquet", "Exchange", "HashAggregate", "MapInPandas"):
+        assert node not in driver_facets, node
     print("plan assertions OK")
 
 
